@@ -37,8 +37,19 @@ object Bench {
     * byte-identical shuffle — accumulated store growth, not plans.
     * Keeping a handful of entries preserves post-run debuggability
     * (PlanProbe reads the LAST execution) while bounding the heap.
+    *
+    * The same dial sizes Spark's JVM-wide generated-class cache. At its
+    * default of 100 entries an iterative query's pass (~335 distinct
+    * whole-stage/projection classes for the label-prop, pagerank, dbscan,
+    * coreset, bm25, dedup and q9 shapes) evicts every class before its
+    * next use, so each pass re-runs Janino and then the JIT on ~360
+    * classes. 1024 holds that working set with margin at ~24 KB of
+    * heap per cached class (source text and bytecode). The cache is
+    * sized once, when the first class is generated, so the first
+    * session of a JVM decides it.
     */
   private[graft] val storeRetention: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "1024",
     "spark.sql.ui.retainedExecutions" -> "4",
     "spark.ui.retainedJobs" -> "50",
     "spark.ui.retainedStages" -> "100",
@@ -49,7 +60,8 @@ object Bench {
   )
 
   /** Apply [[storeRetention]] to a session builder — one shared dial so
-    * Bench/ScaleSuite/ScaleGraph/Verify can't drift apart on it.
+    * Bench/ScaleSuite/ScaleGraph/Verify and the tests can't drift apart
+    * on it.
     */
   private[graft] def withBoundedStore(b: SparkSession.Builder)
       : SparkSession.Builder =
@@ -134,6 +146,14 @@ object Bench {
     def settled(): Long = settledSnap().bytes
   }
 
+  /** Generated classes compiled by Janino so far in this JVM: a codegen
+    * cache hit does not count, so the delta across a warm query is the
+    * code it failed to reuse.
+    */
+  private[graft] def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount
+
   /** Drop all state a query run may have left behind — checkpointed /
     * persisted RDD blocks and cached SQL relations. Six queries
     * `localCheckpoint()` intermediates; without this, by mid-suite the block
@@ -187,7 +207,7 @@ object Bench {
     val loadStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val spark = SparkSession.builder()
+    val spark = withBoundedStore(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -259,22 +279,24 @@ object Bench {
     val results = names.map { name =>
       val sh0 = tally.settled() // outside the timer, like resetState
       val gc0 = gcMillis()
+      val cc0 = codegenCompiles()
       val t0 = System.nanoTime()
       val ok = execute(name, sfDir)
       val sec = (System.nanoTime() - t0) / 1e9
+      val compiles = codegenCompiles() - cc0
       val gcMs = gcMillis() - gc0
       val stored = spark.sparkContext.getRDDStorageInfo
         .map(i => i.memSize + i.diskSize).sum
       val shuffled = tally.settled() - sh0
       resetState(spark) // outside the timer: isolate the NEXT query's line
-      (name, ok, sec, shuffled, gcMs, stored)
+      (name, ok, sec, shuffled, gcMs, stored, compiles)
     }
     // A failed query must make the run visibly worse, never smaller: any
     // failure forces the headline value to the -1.0 whole-run sentinel
     // (a sum that merely omitted the broken query would read as a speedup),
     // and the names land in a `failed` list alongside the passing timings.
-    val passed = results.collect { case (n, true, s, _, _, _) => n -> s }
-    val failed = results.collect { case (n, false, _, _, _, _) => n }
+    val passed = results.collect { case (n, true, s, _, _, _, _) => n -> s }
+    val failed = results.collect { case (n, false, _, _, _, _, _) => n }
     // 4-decimal seconds: full-precision doubles made the one-line artifact
     // long enough that the driver's log-tail capture clipped it.
     // Locale.ROOT: the default locale can render a comma decimal
@@ -283,12 +305,19 @@ object Bench {
       s"\"" + k + "\":" +
         String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     }.mkString("{", ",", "}")
-    val sh = results.collect { case (n, true, _, b, _, _) =>
+    val sh = results.collect { case (n, true, _, b, _, _, _) =>
       s"\"" + n + "\":" + b }.mkString("{", ",", "}")
-    val gc = results.collect { case (n, true, _, _, g, _) =>
+    val gc = results.collect { case (n, true, _, _, g, _, _) =>
       s"\"" + n + "\":" + g }.mkString("{", ",", "}")
-    val st = results.collect { case (n, true, _, _, _, b) =>
+    val st = results.collect { case (n, true, _, _, _, b, _) =>
       s"\"" + n + "\":" + b }.mkString("{", ",", "}")
+    // Janino compiles per timed query. The whole registry generates more
+    // classes than the codegen cache holds, so the warmup pass's classes
+    // are mostly evicted by the time a query runs again here; a count
+    // that stays non-zero on a back-to-back repeat is per-call code.
+    val cc = results.collect { case (n, true, _, _, _, _, c) =>
+      s"\"" + n + "\":" + c }.mkString("{", ",", "}")
+    val ccTotal = results.collect { case (_, true, _, _, _, _, c) => c }.sum
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // `order` records each query's run position explicitly — JSON object key
     // order is not something every reader preserves.
@@ -300,8 +329,9 @@ object Bench {
     // headline: the driver keeps only a 2000-char log tail, and with 130+
     // queries the full map alone is 3KB+ — every prior round's
     // BENCH_r*.json shows a clipped line recorded as parsed:null. The
-    // headline carries the total, failure list, and the 10 slowest queries
-    // (labeled as such), so the tail parse yields the numbers that matter;
+    // headline carries the total, failure list, the 10 slowest queries
+    // (labeled as such) and the suite's compile count, so the tail parse
+    // yields the numbers that matter;
     // the complete map lives in the file the headline points to.
     val loadEnd = loadavg()
     val load =
@@ -312,12 +342,12 @@ object Bench {
         String.format(java.util.Locale.ROOT, "%.4f", Double.box(s)) +
         s",\"shuffle_bytes\":$b,\"ok\":$ok}"
     }.mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"order":$ord,"shuffle_bytes":$sh,"gc_millis":$gc,"storage_bytes":$st,"materializations":$matJson,$load,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"order":$ord,"shuffle_bytes":$sh,"gc_millis":$gc,"storage_bytes":$st,"codegen_compiles":$cc,"materializations":$matJson,$load,"sf":"$sfDir"}"""
     val slowest = passed.sortBy(-_._2).take(10).map { case (k, v) =>
       s"\"" + k + "\":" +
         String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     }.mkString("{", ",", "}")
-    val slim = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${passed.size},"queries":$slowest,"queries_note":"10 slowest of ${passed.size}; full map in target/bench.json","failed":$fs,$load,"sf":"$sfDir"}"""
+    val slim = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${passed.size},"queries":$slowest,"queries_note":"10 slowest of ${passed.size}; full map in target/bench.json","codegen_compiles":$ccTotal,"failed":$fs,$load,"sf":"$sfDir"}"""
     val outPath = java.nio.file.Paths.get("target/bench.json")
     java.nio.file.Files.createDirectories(outPath.getParent)
     java.nio.file.Files.write(outPath,

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Targeted materialization bench: time named `Materializations.builds`
@@ -9,14 +11,18 @@ import org.apache.spark.sql.SparkSession
   * suite where it matters: an untimed warmup build on the smallest
   * fixture first (classes + codegen), then ONE timed cold build at the
   * bench fixture — Scratch.cached makes a second same-key build a no-op,
-  * so repetitions need fresh JVMs (run the main N times).
+  * so repetitions need fresh JVMs (run the main N times). When the warmup
+  * fixture IS the bench fixture, the warmup build is skipped: it would
+  * fill the very cache key the timed build reads, and time a no-op.
+  * A build that fails prints a FAILED line; the remaining names still run.
   *
   * Usage: runMain graft.MatOne m_name [m_name ...]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
   */
 object MatOne {
   def main(args: Array[String]): Unit = {
-    val names = args.toSeq
+    // A repeated name would time its own cached result as a cold build.
+    val names = args.toSeq.distinct
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Bench.defaultCpus)
     val spark = Bench.withBoundedStore(SparkSession.builder())
@@ -30,18 +36,27 @@ object MatOne {
     val tally = new Bench.ShuffleTally
     spark.sparkContext.addSparkListener(tally)
     val byName = Materializations.builds.toMap
+    val warmDir = Bench.warmupDir(sfDir)
+    if (warmDir == sfDir)
+      println(s"MATONE warmup skipped: no separate warmup fixture for " +
+        s"$sfDir, so the timed builds include class loading and codegen")
     names.foreach { n =>
-      val build = byName.getOrElse(n,
-        sys.error(s"unknown materialization: $n"))
-      build(spark, Bench.warmupDir(sfDir)) // untimed warmup, small fixture
-      Bench.resetState(spark)
-      val sh0 = tally.settled()
-      val t0 = System.nanoTime()
-      build(spark, sfDir)
-      val sec = (System.nanoTime() - t0) / 1e9
-      val sh = tally.settled() - sh0
-      println(f"MATONE $n%-24s $sec%8.3f s  shuffle=${sh / 1e6}%9.1f MB")
-      Bench.resetState(spark)
+      try {
+        val build = byName.getOrElse(n,
+          sys.error(s"unknown materialization: $n"))
+        if (warmDir != sfDir) {
+          build(spark, warmDir) // untimed warmup, small fixture
+          Bench.resetState(spark)
+        }
+        val sh0 = tally.settled()
+        val t0 = System.nanoTime()
+        build(spark, sfDir)
+        val sec = (System.nanoTime() - t0) / 1e9
+        val sh = tally.settled() - sh0
+        println(f"MATONE $n%-24s $sec%8.3f s  shuffle=${sh / 1e6}%9.1f MB")
+      } catch {
+        case NonFatal(e) => println(f"MATONE $n%-24s FAILED ${e.getMessage}")
+      } finally Bench.resetState(spark)
     }
     spark.stop()
   }

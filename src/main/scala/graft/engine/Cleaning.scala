@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -86,11 +86,32 @@ object Cleaning {
 
   /** P3/F5: stamp load metadata. Wall-clock by default; injectable for
     * deterministic tests/oracles (SURVEY §7.4 timestamp note).
+    *
+    * The instant is taken ONCE, on the driver, when the frame is built:
+    * every query over the result (the analytics write, the audit
+    * side-output) sees the same `loaded_at`, where `current_timestamp()`
+    * would give each query its own. Both columns are literals, inlined
+    * into generated code: a load on a new instant compiles its projections
+    * again. `load_date` must stay a foldable date literal, because a
+    * partitioned write on a constant column needs no sort.
     */
   def withLoadMetadata(df: DataFrame, at: Option[java.sql.Timestamp] = None)
       : DataFrame = {
-    val ts = at.map(t => lit(t).cast(TimestampType)).getOrElse(current_timestamp())
-    df.withColumn("loaded_at", ts).withColumn("load_date", to_date(ts))
+    val ts = at.getOrElse(java.sql.Timestamp.from(java.time.Instant.now()))
+    df.withColumn("loaded_at", lit(ts))
+      .withColumn("load_date", lit(loadDay(df.sparkSession, ts)))
+  }
+
+  /** The `load_date` of a load stamped `at`: `to_date(loaded_at)` in the
+    * session time zone, computed on the driver.
+    */
+  def loadDay(spark: SparkSession, at: java.sql.Timestamp)
+      : java.time.LocalDate = {
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    val zone =
+      DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+    java.time.LocalDate.ofEpochDay(DateTimeUtils.microsToDays(
+      DateTimeUtils.fromJavaTimestamp(at), zone))
   }
 
   /** Key-based dedup-keep-latest: one surviving row per key, newest

@@ -147,11 +147,10 @@ object Pipeline {
       at: java.sql.Timestamp): Long = {
     import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    // day derived exactly as Cleaning.withLoadMetadata derives load_date
-    // (to_date in the SESSION timezone) — a JVM-default-TZ conversion here
-    // could name a different partition than the one being written
-    val day = spark.range(1)
-      .select(to_date(lit(at)).cast("string")).head().getString(0)
+    // the day Cleaning.withLoadMetadata writes as load_date (the SESSION
+    // timezone) — a JVM-default-TZ conversion here could name a different
+    // partition than the one being written
+    val day = Cleaning.loadDay(spark, at).toString
     val oldRows =
       try readTable(spark, analyticsDir)
         .filter(col("load_date") === lit(day).cast("date")).count()

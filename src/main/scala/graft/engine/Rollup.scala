@@ -279,7 +279,7 @@ object Rollup {
     // missing from a NON-empty journal is the dangerous case — compacted
     // away or never journaled — where a silently-empty reference side
     // would smooth against zeros and report spurious drift.
-    if (tagMissing && jAll.limit(1).count() > 0) {
+    if (tagMissing && !jAll.isEmpty) {
       val missing = Seq((refTag, 0), (curTag, 1)).collect {
         case (tag, i) if present.isNullAt(i) || present.getLong(i) == 0L =>
           tag

@@ -491,8 +491,10 @@ object Dedup {
     // A non-numeric id (e.g. "doc-17") casts to NULL silently, which would
     // collapse unrelated nodes into one null-keyed pseudo-cluster — fail
     // loudly instead, matching the convergence posture below. The probe is
-    // one bounded count on the already-checkpointed edges.
-    if (edges.filter(col("a").isNull || col("b").isNull).limit(1).count() > 0)
+    // one bounded isEmpty on the already-checkpointed edges: it plans as a
+    // CollectLimit, whose code is reused across calls, where a
+    // limit(1).count() generates a fresh limit counter every time.
+    if (!edges.filter(col("a").isNull || col("b").isNull).isEmpty)
       throw new IllegalArgumentException(
         s"connectedComponents: ids in '$aCol'/'$bCol' are null after " +
           "cast to long — pair ids must be non-null and numeric")
@@ -574,7 +576,7 @@ object Dedup {
     val allNodes = p0.select(col("a").as("id"))
       .unionAll(p0.select(col("b").as("id")))
       .distinct().localCheckpoint()
-    if (allNodes.filter(col("id").isNull).limit(1).count() > 0)
+    if (!allNodes.filter(col("id").isNull).isEmpty)
       throw new IllegalArgumentException(
         s"connectedComponentsStar: ids in '$aCol'/'$bCol' are null after " +
           "cast to long — pair ids must be non-null and numeric")
@@ -612,7 +614,7 @@ object Dedup {
       // materializing action (r19).
       val eNewCount = eNew.count()
       done = eNewCount == eCount &&
-        eNew.exceptAll(e).limit(1).count() == 0
+        eNew.exceptAll(e).isEmpty
       e = eNew
       eCount = eNewCount
       iter += 1

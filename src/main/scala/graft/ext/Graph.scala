@@ -71,7 +71,7 @@ object Graph {
       .repartition(col("src"))
       .dropDuplicates(Seq("src", "dst"))
       .localCheckpoint(false, edgeStorage)
-    if (e.filter(col("src").isNull || col("dst").isNull).limit(1).count() > 0)
+    if (!e.filter(col("src").isNull || col("dst").isNull).isEmpty)
       throw new IllegalArgumentException(
         s"$what: ids in '$srcCol'/'$dstCol' are null after cast " +
           "to long — edge endpoints must be non-null and numeric")

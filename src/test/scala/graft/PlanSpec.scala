@@ -659,4 +659,38 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SinglePartition, "), p)
     assert(!p.contains("n_chars") && !p.contains("source"), p)
   }
+
+  test("the load's partitioned write needs no sort: load_date is a " +
+      "constant") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-loadplan")
+    val staging = tmp.resolve("staging").toString
+    Seq((2020, " CA ", 12.5), (2021, "NY", 150.0))
+      .toDF("yearstart", "locationabbr", "data_value")
+      .write.parquet(staging)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val p = qe.executedPlan.toString()
+        if (p.contains("InsertIntoHadoopFsRelationCommand")) writes.add(p)
+      }
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.engine.Pipeline.load(spark, staging, tmp.resolve("out").toString)
+      val deadline = System.nanoTime() + 10000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
+    val p = writes.peek()
+    assert(p != null, "the load's write was not observed")
+    assert(p.contains("load_date"), p)
+    assert(!p.contains("Sort ["), s"sort under the partitioned write:\n$p")
+  }
 }

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for the whole test run (suites share the JVM
   * under sbt's forked test runner; building a session per suite would
-  * dominate wall-clock).
+  * dominate wall-clock). Built through [[Bench.withBoundedStore]], so the
+  * tests run under the same session defaults as the measuring mains.
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = Bench.withBoundedStore(SparkSession.builder())
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")

@@ -76,6 +76,46 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .exists(_.getName.startsWith("load_date=")))
   }
 
+  test("one load stamps the audit rows and the analytics rows alike") {
+    val landing = writeLanding("landing-stamp.csv", goodRows)
+    val staging = root.resolve("stamp-staging").toString
+    val analytics = root.resolve("stamp-analytics").toString
+    val audit = root.resolve("stamp-audit").toString
+    Pipeline.extract(spark, landing, staging)
+    Pipeline.load(spark, staging, analytics, Some(audit),
+      rangeCol = Some(("data_value", 0.0, 100.0)))
+    // the CSV carries milliseconds, so compare at that precision
+    val audited = spark.read.option("header", "true").csv(audit)
+      .select(to_timestamp(col("loaded_at"))).collect().map(_.get(0)).toSet
+    val loaded = spark.read.parquet(analytics)
+      .select(date_trunc("millisecond", col("loaded_at")))
+      .collect().map(_.get(0)).toSet
+    assert(loaded.size == 1, s"one load, several stamps: $loaded")
+    assert(audited == loaded)
+  }
+
+  test("load_date is to_date(loaded_at) in the session zone near midnight") {
+    import java.time.Instant
+    import spark.implicits._
+    val analytics = root.resolve("stamp-zone").toString
+    val zoneKey = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(zoneKey)
+    spark.conf.set(zoneKey, "Asia/Tokyo") // UTC+9: the UTC day differs
+    try {
+      // 23:59:59.999 on Jan 1 and 00:00 on Jan 2 in Tokyo, both Jan 1 UTC
+      for ((at, id) <- Seq("2024-01-01T14:59:59.999Z",
+          "2024-01-01T15:00:00Z").zipWithIndex)
+        Pipeline.appendCleaned(Seq(id.toLong).toDF("id"), analytics,
+          Some(java.sql.Timestamp.from(Instant.parse(at))))
+      val t = Pipeline.readTable(spark, analytics)
+      assert(t.filter(col("load_date") =!= to_date(col("loaded_at")))
+        .count() == 0)
+      assert(t.select(col("id"), col("load_date").cast("string")).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+        Map(0L -> "2024-01-01", 1L -> "2024-01-02"))
+    } finally spark.conf.set(zoneKey, prev)
+  }
+
   test("chunk-staged extract equals the direct landing extract") {
     val landing = writeLanding("landing-chunks-src.csv", goodRows)
     val direct = root.resolve("staging-direct").toString
