@@ -115,6 +115,14 @@ object Bench {
     // Settle watch: counts every delivery, so a task that writes zero
     // shuffle bytes still advances the watched counter.
     val tasks = new java.util.concurrent.atomic.AtomicLong
+    // Jobs started, AQE map-stage jobs included: at ~30 ms of driver and
+    // scheduling cost each, the count prices a latency-bound query.
+    // A job's start is posted before its tasks, so a settled read is
+    // complete.
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    override def onJobStart(
+        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
     override def onTaskEnd(
         t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       val m = t.taskMetrics
@@ -145,6 +153,10 @@ object Bench {
     }
     def settled(): Long = settledSnap().bytes
   }
+
+  /** One timed query's ledger line. */
+  private final case class QueryRun(name: String, ok: Boolean, sec: Double,
+      shuffled: Long, gcMs: Long, stored: Long, compiles: Long, jobs: Long)
 
   /** Generated classes compiled by Janino so far in this JVM: a codegen
     * cache hit does not count, so the delta across a warm query is the
@@ -278,6 +290,7 @@ object Bench {
     }
     val results = names.map { name =>
       val sh0 = tally.settled() // outside the timer, like resetState
+      val jobs0 = tally.jobs.get
       val gc0 = gcMillis()
       val cc0 = codegenCompiles()
       val t0 = System.nanoTime()
@@ -288,15 +301,17 @@ object Bench {
       val stored = spark.sparkContext.getRDDStorageInfo
         .map(i => i.memSize + i.diskSize).sum
       val shuffled = tally.settled() - sh0
+      val jobs = tally.jobs.get - jobs0
       resetState(spark) // outside the timer: isolate the NEXT query's line
-      (name, ok, sec, shuffled, gcMs, stored, compiles)
+      QueryRun(name, ok, sec, shuffled, gcMs, stored, compiles, jobs)
     }
     // A failed query must make the run visibly worse, never smaller: any
     // failure forces the headline value to the -1.0 whole-run sentinel
     // (a sum that merely omitted the broken query would read as a speedup),
     // and the names land in a `failed` list alongside the passing timings.
-    val passed = results.collect { case (n, true, s, _, _, _, _) => n -> s }
-    val failed = results.collect { case (n, false, _, _, _, _, _) => n }
+    val ok = results.filter(_.ok)
+    val passed = ok.map(r => r.name -> r.sec)
+    val failed = results.filterNot(_.ok).map(_.name)
     // 4-decimal seconds: full-precision doubles made the one-line artifact
     // long enough that the driver's log-tail capture clipped it.
     // Locale.ROOT: the default locale can render a comma decimal
@@ -305,19 +320,19 @@ object Bench {
       s"\"" + k + "\":" +
         String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     }.mkString("{", ",", "}")
-    val sh = results.collect { case (n, true, _, b, _, _, _) =>
-      s"\"" + n + "\":" + b }.mkString("{", ",", "}")
-    val gc = results.collect { case (n, true, _, _, g, _, _) =>
-      s"\"" + n + "\":" + g }.mkString("{", ",", "}")
-    val st = results.collect { case (n, true, _, _, _, b, _) =>
-      s"\"" + n + "\":" + b }.mkString("{", ",", "}")
+    def perQuery(v: QueryRun => Long): String =
+      ok.map(r => s"\"" + r.name + "\":" + v(r)).mkString("{", ",", "}")
+    val sh = perQuery(_.shuffled)
+    val gc = perQuery(_.gcMs)
+    val st = perQuery(_.stored)
     // Janino compiles per timed query. The whole registry generates more
     // classes than the codegen cache holds, so the warmup pass's classes
     // are mostly evicted by the time a query runs again here; a count
     // that stays non-zero on a back-to-back repeat is per-call code.
-    val cc = results.collect { case (n, true, _, _, _, _, c) =>
-      s"\"" + n + "\":" + c }.mkString("{", ",", "}")
-    val ccTotal = results.collect { case (_, true, _, _, _, _, c) => c }.sum
+    val cc = perQuery(_.compiles)
+    val ccTotal = ok.map(_.compiles).sum
+    val jb = perQuery(_.jobs)
+    val jobsTotal = ok.map(_.jobs).sum
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // `order` records each query's run position explicitly — JSON object key
     // order is not something every reader preserves.
@@ -330,9 +345,9 @@ object Bench {
     // queries the full map alone is 3KB+ — every prior round's
     // BENCH_r*.json shows a clipped line recorded as parsed:null. The
     // headline carries the total, failure list, the 10 slowest queries
-    // (labeled as such) and the suite's compile count, so the tail parse
-    // yields the numbers that matter;
-    // the complete map lives in the file the headline points to.
+    // (labeled as such) and the suite's compile and job counts, so the
+    // tail parse yields the numbers that matter; the complete map lives
+    // in the file the headline points to.
     val loadEnd = loadavg()
     val load =
       s""""loadavg_start":"$loadStart","loadavg_end":"$loadEnd",""" +
@@ -342,12 +357,12 @@ object Bench {
         String.format(java.util.Locale.ROOT, "%.4f", Double.box(s)) +
         s",\"shuffle_bytes\":$b,\"ok\":$ok}"
     }.mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"order":$ord,"shuffle_bytes":$sh,"gc_millis":$gc,"storage_bytes":$st,"codegen_compiles":$cc,"materializations":$matJson,$load,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"order":$ord,"shuffle_bytes":$sh,"gc_millis":$gc,"storage_bytes":$st,"codegen_compiles":$cc,"jobs":$jb,"materializations":$matJson,$load,"sf":"$sfDir"}"""
     val slowest = passed.sortBy(-_._2).take(10).map { case (k, v) =>
       s"\"" + k + "\":" +
         String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     }.mkString("{", ",", "}")
-    val slim = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${passed.size},"queries":$slowest,"queries_note":"10 slowest of ${passed.size}; full map in target/bench.json","codegen_compiles":$ccTotal,"failed":$fs,$load,"sf":"$sfDir"}"""
+    val slim = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${passed.size},"queries":$slowest,"queries_note":"10 slowest of ${passed.size}; full map in target/bench.json","codegen_compiles":$ccTotal,"jobs":$jobsTotal,"failed":$fs,$load,"sf":"$sfDir"}"""
     val outPath = java.nio.file.Paths.get("target/bench.json")
     java.nio.file.Files.createDirectories(outPath.getParent)
     java.nio.file.Files.write(outPath,

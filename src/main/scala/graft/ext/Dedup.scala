@@ -461,8 +461,10 @@ object Dedup {
     * rest), which is what a production dedup actually emits.
     *
     * Scale shape: O(diameter) rounds of one join + one partial-agg shuffle
-    * each; dedup components are near-cliques of duplicates, so diameter is
-    * tiny (2-3 rounds) regardless of corpus size. Labels are
+    * each (the edge set carries every node's self-loop, so the node's own
+    * label arrives through the same join); dedup components are
+    * near-cliques of duplicates, so diameter is tiny (2-3 rounds)
+    * regardless of corpus size. Labels are
     * localCheckpointed per round (persist/write on a cluster) — iterative
     * lineage otherwise grows the plan exponentially. The per-round
     * convergence probe is a 1-row count, not a data collect. When the
@@ -508,24 +510,30 @@ object Dedup {
       .agg(min(col("b")).as("nmin"))
       .select(col("id"), least(col("id"), col("nmin")).as("label"))
       .localCheckpoint(false)
+    // Every node's self-loop joins the edge set once, so a round is one
+    // join plus one aggregate: the min over a node's closed neighborhood
+    // is its new label, and the label arriving over the self-loop is its
+    // old one. Lazy: the first round's count materializes it.
+    val closed = edges
+      .unionAll(labels.select(col("id").as("a"), col("id").as("b")))
+      .localCheckpoint(false)
     var changed = 1L
     var iter = 1
     while (changed > 0 && iter < maxIter) {
-      val neighborMin = edges
+      // Lazy checkpoint: the movement probe right below is a FULL count,
+      // so it materializes the blocks itself (r19). It counts the rows
+      // of the RDD, one job with no exchange; a DataFrame count would add
+      // a global-aggregate shuffle and a second job.
+      val updated = closed
         .join(labels.select(col("id").as("nid"), col("label").as("nlabel")),
           col("b") === col("nid"))
-        .groupBy(col("a").as("id")).agg(min(col("nlabel")).as("nmin"))
-      // Lazy checkpoint: the movement probe right below is a FULL count,
-      // so it materializes the blocks itself — one job per round instead
-      // of checkpoint-then-count (r19).
-      val updated = labels
-        .join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nmin"), col("label")))
-            .as("label"),
-          (col("nmin") < col("label")).as("moved"))
+        .groupBy(col("a").as("id"))
+        .agg(min(col("nlabel")).as("label"),
+          min(when(col("a") === col("b"), col("nlabel"))).as("old"))
+        .select(col("id"), col("label"),
+          (col("label") < col("old")).as("moved"))
         .localCheckpoint(false)
-      changed = updated.filter(col("moved")).count()
+      changed = updated.filter(col("moved")).queryExecution.toRdd.count()
       labels = updated.drop("moved")
       iter += 1
     }

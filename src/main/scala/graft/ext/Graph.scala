@@ -621,10 +621,10 @@ object Graph {
     * Scale shape: the undirected neighbor list (both directions of the
     * canonical lo<hi edge set) is built once and localCheckpointed; each
     * round is ONE equi-join of the node-sized label table onto the
-    * neighbor list + a (node, label) hash-agg with map-side combine +
-    * a per-node max(struct) argmax — O(E) per round, labels
-    * localCheckpointed so the plan never deepens. All arithmetic is
-    * integer (counts and long labels): bit-identical across engines.
+    * neighbor list + one per-node deterministic `mode` aggregation —
+    * O(E) per round, labels localCheckpointed so the plan never deepens.
+    * All arithmetic is integer (counts and long labels): bit-identical
+    * across engines.
     *
     * Returns (node_id, community) for every node of the graph.
     */
@@ -639,22 +639,19 @@ object Graph {
       .union(und.select(col("hi").as("id"))).distinct().localCheckpoint()
     // Rounds stay EAGERLY checkpointed here — the r19 lazy-composition
     // A/B (which pays off for pageRankNano) measured ~1 s WORSE on this
-    // operator at sf0.1 (two aggregation exchanges per round; the eager
-    // per-round materialization was consistently faster across
-    // interleaved reps), so the measured shape stands.
+    // operator at sf0.1 (the eager per-round materialization was
+    // consistently faster across interleaved reps), so the measured
+    // shape stands.
     var labels = nodes.select(col("id"), col("id").as("lbl"))
     for (_ <- 1 to iters) {
-      // argmax by (count, -label): max struct comparison is
-      // lexicographic, so equal counts fall through to the LARGEST
-      // negated label = smallest label. Isolated nodes can't occur
-      // (every node has >=1 edge by construction).
+      // Deterministic mode returns the smallest of the most frequent
+      // labels: exactly the min-label tie rule, in one aggregation.
+      // Isolated nodes can't occur (every node has >=1 edge by
+      // construction).
       labels = nbr
         .join(labels.select(col("id").as("nb"), col("lbl")), Seq("nb"))
-        .groupBy(col("id"), col("lbl"))
-        .agg(count(lit(1)).as("n"))
         .groupBy(col("id"))
-        .agg(max(struct(col("n"), (-col("lbl")).as("neg"))).as("top"))
-        .select(col("id"), (-col("top.neg")).as("lbl"))
+        .agg(mode(col("lbl"), deterministic = true).as("lbl"))
         .localCheckpoint()
     }
     labels.select(col("id").as("node_id"), col("lbl").as("community"))

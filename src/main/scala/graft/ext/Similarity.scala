@@ -672,11 +672,21 @@ object Similarity {
     * point farthest from the selected set" under rounded cosine distance
     * (round(1 − cos, 6), id tie-break — fully deterministic).
     *
-    * Scale shape: every round is ONE corpus pass — the ≤k selected
-    * vectors broadcast to a crossJoin, per-candidate min over ≤k
-    * distances (codegen'd native dot), then a TakeOrderedAndProject
-    * argmax. Per round the driver holds exactly one row (the kmeans-step
-    * precedent); total work O(n·k) dot products, no pairwise n².
+    * Scale shape: every round is ONE job — a corpus pass computing each
+    * candidate's least rounded distance to the ≤k selected vectors
+    * (codegen'd native dot), then a TakeOrderedAndProject argmax that
+    * returns the winner's id, distance, vector and norm. The next round
+    * carries the selected ids, vectors and norms as array literals, which
+    * generated code reads by reference, so a round's class is reused
+    * across runs and inputs; a double literal would be inlined into the
+    * source. Per round the driver holds exactly one row (the kmeans-step
+    * precedent); total work O(n·k²) dot products, no pairwise n². Before
+    * the rounds, a 2-job seed step (one shuffle of the corpus by id)
+    * checks that ids are unique and returns the seed with its vector.
+    *
+    * Selection is per id: a row with a null id is never selected, and a
+    * duplicated id fails loudly, since a per-row argmax matches the
+    * per-id farthest point only when ids are unique.
     *
     * Returns (sel_order, id, dist) — the coverage radius of the final
     * set is max over the LAST round's candidates, i.e. the selection
@@ -687,31 +697,53 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = emb.sparkSession
     import spark.implicits._
-    // Lazy: the seed argmin collect right below materializes the blocks.
+    // Lazy: the seed step right below materializes the blocks.
     val corpus = withNorm(emb, idCol, vecCol).localCheckpoint(false)
-    val seedRow = corpus.agg(min(col(idCol))).collect() // bounded: 1 row
+      .filter(col(idCol).isNotNull)
+    // Seed step, one shuffle: each row with its id's row count. Bounded
+    // collect of one row: ordered by that count first, it is the seed
+    // (smallest id) whenever every id is unique.
+    val first = corpus
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col(idCol))))
+      .orderBy(col("n").desc, col(idCol).asc).limit(1).collect()
     var selected = Vector.empty[(Long, Long, Double)]
-    if (!seedRow(0).isNullAt(0)) {
-      selected :+= ((1L, seedRow(0).getLong(0), 0.0))
+    if (first.nonEmpty) {
+      val n = first(0).getLong(3)
+      if (n > 1)
+        throw new IllegalArgumentException(
+          s"kCenterCoreset: id ${first(0).get(0)} appears $n times in " +
+            s"'$idCol' — selection is per id, so ids must be unique")
+      // (id, v, Array(nrm)) of a selected point, carried into the next
+      // rounds as array literals; null vectors and elements stay null.
+      def carried(id: Long, r: org.apache.spark.sql.Row, v: Int) =
+        (id, Option(r.getSeq[java.lang.Double](v)).map(_.toArray).orNull,
+          Array(r.getAs[java.lang.Double](v + 1)))
+      val seedId = first(0).getLong(0)
+      var sel = Vector(carried(seedId, first(0), 1))
+      selected :+= ((1L, seedId, 0.0))
       var r = 2
       var exhausted = false
       while (r <= k && !exhausted) {
-        val selIds = selected.map(_._2)
-        val selDf = broadcast(corpus
-          .filter(col(idCol).isInCollection(selIds))
-          .select(col("v").as("sv"), col("nrm").as("snrm")))
+        // nrm·snrm as a one-term dot product: the same double (0.0 + p),
+        // with snrm read by reference from an array literal.
+        val dists = sel.map { case (_, sv, snrm) =>
+          round(lit(1.0) - dot(col("v"), lit(sv)) /
+            dot(array(col("nrm")), lit(snrm)), 6)
+        }
         // Bounded collect: TakeOrderedAndProject of exactly one row.
-        val top = corpus.filter(!col(idCol).isInCollection(selIds))
-          .crossJoin(selDf)
+        val top = corpus
+          .filter(!array_contains(lit(sel.map(_._1).toArray), col(idCol)))
           .select(col(idCol),
-            round(lit(1.0) - dot(col("v"), col("sv")) /
-              (col("nrm") * col("snrm")), 6).as("d"))
-          .groupBy(col(idCol)).agg(min(col("d")).as("dmin"))
+            (if (dists.size == 1) dists.head else least(dists: _*))
+              .as("dmin"),
+            col("v"), col("nrm"))
           .orderBy(col("dmin").desc, col(idCol).asc)
           .limit(1).collect()
         if (top.isEmpty) exhausted = true
         else {
-          selected :+= ((r.toLong, top(0).getLong(0), top(0).getDouble(1)))
+          val t = top(0)
+          sel :+= carried(t.getLong(0), t, 2)
+          selected :+= ((r.toLong, t.getLong(0), t.getDouble(1)))
           r += 1
         }
       }

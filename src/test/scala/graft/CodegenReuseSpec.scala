@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{Dedup, Graph}
+import graft.ext.{Dedup, Graph, Similarity}
 
 /** Generated code is compiled once per session: running an operator a
   * second time, on freshly built inputs of the same shape, must find
@@ -44,6 +44,33 @@ class CodegenReuseSpec extends AnyFunSuite {
       Graph.pageRankNano(
         pairs("src", "dst", (2L, 1L), (3L, 1L), (1L, 2L), (4L, 3L)),
         "src", "dst", 3).collect()
+    }
+    assert(n == 0, s"$n classes compiled again")
+  }
+
+  test("labelPropagation compiles nothing on its second run") {
+    val n = secondRunCompiles {
+      Graph.labelPropagation(
+        pairs("src", "dst", (1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)),
+        "src", "dst", 3).collect()
+    }
+    assert(n == 0, s"$n classes compiled again")
+  }
+
+  test("kCenterCoreset compiles nothing on its second run, even on " +
+      "other ids and vectors") {
+    import spark.implicits._
+    // Selected ids, vectors and norms reach generated code by reference,
+    // so a round's class does not depend on the data.
+    var shift = 0
+    val n = secondRunCompiles {
+      shift += 10
+      Similarity.kCenterCoreset(
+        Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(1f, 1f)),
+          (4L, Seq(-1f, 0.5f)))
+          .map { case (i, v) => (Option(i + shift), v.map(_ + shift)) }
+          .toDF("vec_id", "embedding"),
+        "vec_id", "embedding", 4).collect()
     }
     assert(n == 0, s"$n classes compiled again")
   }

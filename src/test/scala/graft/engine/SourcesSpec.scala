@@ -109,4 +109,58 @@ class SourcesSpec extends AnyFunSuite {
     assert(df.schema("ts").dataType == TimestampType)
     assert(df.selectExpr("max(ts)").head().getTimestamp(0) != null)
   }
+
+  test("a rewritten table is read with its new schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-memo").toString
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/t.parquet")
+    assert(Sources.table(spark, dir, "t").columns.toSeq == Seq("id", "s"))
+    Seq((2L, 0.5)).toDF("id", "x").write.mode("overwrite")
+      .parquet(s"$dir/t.parquet")
+    val back = Sources.table(spark, dir, "t")
+    assert(back.schema("x").dataType == DoubleType)
+    assert(back.collect().map(_.toSeq).toSeq == Seq(Seq(2L, 0.5)))
+  }
+
+  /** One parquet file whose int64 `ts` is annotated TIMESTAMP(NANOS), the
+    * encoding Spark cannot write itself.
+    */
+  private def writeNanosParquet(file: String, nanos: Long): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(file))
+      .withConf(new org.apache.hadoop.conf.Configuration).withType(schema)
+      .build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("id", 1L).append("ts", nanos))
+    finally w.close()
+  }
+
+  test("flipping nanosAsLong re-infers a memoized schema") {
+    val dir = Files.createTempDirectory("graft-memo-nanos").toString
+    writeNanosParquet(s"$dir/n.parquet/part-0.parquet", 1700000000123456789L)
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(Sources.table(spark, dir, "n").schema("ts").dataType == LongType)
+    spark.conf.set(key, "false")
+    try {
+      val e = intercept[Exception](Sources.table(spark, dir, "n"))
+      assert(e.getMessage.contains("TIMESTAMP(NANOS"), e.getMessage)
+    } finally spark.conf.set(key, "true")
+    assert(Sources.table(spark, dir, "n").schema("ts").dataType == LongType)
+  }
+
+  test("events probe runs again when the file is rewritten as micros") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-evt-rewrite").toString
+    def write(ts: Long) = Seq((1L, ts, 7L, "click", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    write(1700000000123456789L) // epoch-nanos: passes the probe
+    assert(Sources.events(spark, dir).count() == 1)
+    write(1700000000123456L) // same directory, now epoch-micros
+    val e = intercept[IllegalStateException](Sources.events(spark, dir))
+    assert(e.getMessage.contains("epoch-micros"))
+  }
 }

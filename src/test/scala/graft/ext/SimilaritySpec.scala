@@ -280,4 +280,85 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(got == Set(0L))
   }
+
+  /** Rows with nullable ids and nullable vector elements. */
+  private def embNullable(rows: (java.lang.Long, Seq[java.lang.Float])*) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, v) => Row(i, v) }),
+      schema)
+  }
+
+  /** Driver-side farthest-first traversal with the operator's arithmetic:
+    * sequential-fold dot products, round(1 − cos, 6) half-up, min over
+    * the selected set, then the farthest candidate, smallest id on ties.
+    * Returns (sel_order, id, dist).
+    */
+  private def farthestFirst(pts: Seq[(Long, Seq[Float])], k: Int)
+      : Seq[(Long, Long, Double)] = {
+    val vs = pts.map { case (i, v) => i -> v.map(_.toDouble) }.toMap
+    def dot(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+    def dist(a: Seq[Double], b: Seq[Double]) =
+      BigDecimal(1.0 - dot(a, b) / (math.sqrt(dot(a, a)) *
+        math.sqrt(dot(b, b))))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    var out = Vector((1L, vs.keys.min, 0.0))
+    while (out.size < k && out.size < vs.size) {
+      val sel = out.map(_._2)
+      val (id, d) = vs.keys.filterNot(sel.contains).toSeq
+        .map(i => i -> sel.map(s => dist(vs(i), vs(s))).min)
+        .minBy { case (i, d) => (-d, i) }
+      out :+= ((out.size + 1L, id, d))
+    }
+    out
+  }
+
+  private def coreset(df: org.apache.spark.sql.DataFrame, k: Int) =
+    Similarity.kCenterCoreset(df, "vec_id", "embedding", k).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+
+  test("kCenterCoreset matches a brute-force farthest-first traversal") {
+    // 40 seeded pseudo-random points on a 4-d integer grid, ids shuffled.
+    val rnd = new scala.util.Random(7)
+    val pts = (0 until 40).map { i =>
+      (100L + (i * 37) % 40, Seq.fill(4)((rnd.nextInt(21) - 10).toFloat))
+    }.filter(_._2.exists(_ != 0f))
+    val df = emb(pts.map { case (i, v) => (i, v, 0) }: _*)
+    assert(coreset(df, 12) == farthestFirst(pts, 12))
+  }
+
+  test("kCenterCoreset breaks distance ties by id and stops when the " +
+      "corpus is exhausted") {
+    // Seed 1; 5 and 3 are both at distance 1 from it, so 3 goes first.
+    val pts = Seq((1L, Seq(1f, 0f)), (5L, Seq(0f, 1f)),
+      (3L, Seq(0f, -1f)), (7L, Seq(1f, 1f)))
+    val df = emb(pts.map { case (i, v) => (i, v, 0) }: _*)
+    val got = coreset(df, 9)
+    assert(got.map(_._2) == Seq(1L, 3L, 5L, 7L))
+    assert(got == farthestFirst(pts, 9))
+  }
+
+  test("kCenterCoreset never selects a null id, and a null element " +
+      "keeps a vector's distance null") {
+    val f = (x: Float) => java.lang.Float.valueOf(x)
+    val df = embNullable(
+      (1L, Seq(f(1f), f(0f))), (3L, Seq(f(0f), f(-1f))),
+      (5L, Seq(f(0f), f(1f))), (7L, Seq(f(1f), f(1f))),
+      (null, Seq(f(-1f), f(0f))), // the farthest point, but no id
+      (2L, Seq(null, f(-1f))))   // null distance: sorts after every other
+    val clean = Seq((1L, Seq(1f, 0f)), (3L, Seq(0f, -1f)),
+      (5L, Seq(0f, 1f)), (7L, Seq(1f, 1f)))
+    assert(coreset(df, 4) == farthestFirst(clean, 4))
+  }
+
+  test("kCenterCoreset rejects duplicate ids") {
+    val df = emb((1L, Seq(1f, 0f), 0), (2L, Seq(0f, 1f), 0),
+      (2L, Seq(1f, 1f), 0))
+    val e = intercept[IllegalArgumentException](coreset(df, 3))
+    assert(e.getMessage.contains("appears 2 times"))
+  }
 }
