@@ -36,7 +36,7 @@ object Bench {
     * the final ~15 queries (q_window_ntile 0.73 s -> 2.30 s) at
     * byte-identical shuffle — accumulated store growth, not plans.
     * Keeping a handful of entries preserves post-run debuggability
-    * (PlanProbe reads the LAST execution) while bounding the heap.
+    * (the last few executions stay readable) while bounding the heap.
     *
     * The same dial sizes Spark's JVM-wide generated-class cache. At its
     * default of 100 entries an iterative query's pass (~335 distinct
@@ -60,12 +60,35 @@ object Bench {
   )
 
   /** Apply [[storeRetention]] to a session builder — one shared dial so
-    * Bench/ScaleSuite/ScaleGraph/Verify and the tests can't drift apart
-    * on it.
+    * the measuring mains and the tests can't drift apart on it.
     */
   private[graft] def withBoundedStore(b: SparkSession.Builder)
       : SparkSession.Builder =
     storeRetention.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The one session every measuring main builds: bounded status store,
+    * `local[cpus]` with as many shuffle partitions, UTC, fixture
+    * nanosecond timestamps read as longs, no UI, WARN logs.
+    */
+  private[graft] def session(cpus: String): SparkSession = {
+    val spark = withBoundedStore(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** SPARK_GRAFT_CPUS, else the main's own default. */
+  private[graft] def envCpus(default: String = defaultCpus): String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
+
+  /** SPARK_GRAFT_SF_DIR, else the sf0.1 bench fixture. */
+  private[graft] def envSfDir(): String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
   /** Force a query through its FULL physical plan and throw the rows away
     * executor-side — same effect as a noop-datasource write (`.count()`
@@ -217,16 +240,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val loadStart = loadavg()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val spark = withBoundedStore(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = envSfDir()
+    val spark = session(envCpus())
 
     // Shuffle-minimalism is MEASURED per query, not asserted: a listener
     // tallies task-level shuffle writes across the query's whole window —
@@ -264,15 +279,15 @@ object Bench {
     // fixture (no sf0.001 present) the warmup already built these and
     // the build lines read ~0 — the driver environment always has the
     // warmup fixture, so the priced numbers are cold builds there.
-    val mats = Materializations.builds.map { case (name, build) =>
+    val mats = Materializations.builds.map { b =>
       val sh0 = tally.settled()
       val t0 = System.nanoTime()
-      val ok = try { build(spark, sfDir); true }
+      val ok = try { b.run(spark, sfDir); true }
         catch { case scala.util.control.NonFatal(_) => false }
       val sec = (System.nanoTime() - t0) / 1e9
       val sh = tally.settled() - sh0
       resetState(spark)
-      (name, ok, sec, sh)
+      (b.name, ok, sec, sh)
     }
 
     // Checkpoint-pressure instrumentation (r9 verdict: the minhash family

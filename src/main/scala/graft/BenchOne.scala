@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Targeted bench: time named queries one at a time under the same settings
   * as [[Bench]], optionally dumping the executed plan. Usage:
@@ -38,39 +37,18 @@ object BenchOne {
     }
     require(reps >= 1, s"--reps must be >= 1, got $reps")
     val names = rest.filterNot(_.startsWith("--"))
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Bench.defaultCpus)
-    val spark = Bench.withBoundedStore(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Bench.envSfDir()
+    val spark = Bench.session(Bench.envCpus())
     val tally = new Bench.ShuffleTally
     spark.sparkContext.addSparkListener(tally)
+
+    // Same contract as Bench: the builds these names read run outside
+    // every timer, so a timed rep bills only the query's own reads.
+    Materializations.prebuild(spark, names, sfDir)
 
     // One query's failure must not strand the rest of the requested names —
     // but fatal JVM errors (OOM) propagate: timings from a corrupted JVM
     // would look like normal output while being garbage.
-    // Same contract as Bench: cached incremental tables are built outside
-    // every timer, so a standalone q_incremental_* run times only the read
-    // instead of billing the whole two-load build to itself. Gated — other
-    // queries shouldn't pay the two loads + compaction at startup.
-    if (names.exists(n =>
-        n.startsWith("q_incremental") || n == "q_dedup_incremental"))
-      queries.Incremental.ensureBuilt(spark, sfDir)
-    if (names.contains("q_join_bucketed"))
-      queries.Joins.ensureBucketed(spark, sfDir)
-    if (names.exists(Set("q_triangles_state", "q_clustering_coeff",
-        "q_ktruss")))
-      queries.Joins.triStateDir(spark, sfDir)
-    if (names.contains("q_dedup_state_kept"))
-      queries.Docs.dedupStateDir(spark, sfDir)
-    if (names.contains("q_dedup_state_incr"))
-      queries.Docs.dedupStateIncrDir(spark, sfDir)
-
     names.foreach { name =>
       try {
         Bench.runToExhaustion(

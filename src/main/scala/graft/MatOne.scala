@@ -2,8 +2,6 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted materialization bench: time named `Materializations.builds`
   * entries in isolation under the same settings as [[Bench]] — the fast
   * loop for iterating on a build's structure (e.g. the triangle-state
@@ -23,19 +21,11 @@ object MatOne {
   def main(args: Array[String]): Unit = {
     // A repeated name would time its own cached result as a cold build.
     val names = args.toSeq.distinct
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Bench.defaultCpus)
-    val spark = Bench.withBoundedStore(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Bench.envSfDir()
+    val spark = Bench.session(Bench.envCpus())
     val tally = new Bench.ShuffleTally
     spark.sparkContext.addSparkListener(tally)
-    val byName = Materializations.builds.toMap
+    val byName = Materializations.builds.map(b => b.name -> b.run).toMap
     val warmDir = Bench.warmupDir(sfDir)
     if (warmDir == sfDir)
       println(s"MATONE warmup skipped: no separate warmup fixture for " +

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** The engine's "pay the shuffle once at ingest" levers as a NAMED,
@@ -38,19 +40,49 @@ import org.apache.spark.sql.SparkSession
   */
 object Materializations {
 
+  /** One priced build: its name, the registry queries that read its
+    * tables, and the build itself. The consumer list is the one place
+    * that says which build a query needs, so every tool that runs a
+    * subset of the registry pre-builds from it.
+    */
+  final case class Build(name: String, consumers: Set[String],
+      run: (SparkSession, String) => Unit)
+
   /** Build order is alphabetical and entries are independent — no build
     * reads another's output.
     */
-  val builds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "m_bucketed_tables" ->
-      ((s, d) => { queries.Joins.ensureBucketed(s, d); () }),
-    "m_dedup_state" ->
-      ((s, d) => { queries.Docs.dedupStateDir(s, d); () }),
-    "m_dedup_state_incr" ->
-      ((s, d) => { queries.Docs.dedupStateIncrDir(s, d); () }),
-    "m_incremental_history" ->
-      ((s, d) => queries.Incremental.ensureBuilt(s, d)),
-    "m_triangle_state" ->
-      ((s, d) => { queries.Joins.triStateDir(s, d); () }),
+  val builds: Seq[Build] = Seq(
+    Build("m_bucketed_tables", Set("q_join_bucketed"),
+      (s, d) => { queries.Joins.ensureBucketed(s, d); () }),
+    Build("m_dedup_state", Set("q_dedup_state_kept"),
+      (s, d) => { queries.Docs.dedupStateDir(s, d); () }),
+    Build("m_dedup_state_incr", Set("q_dedup_state_incr"),
+      (s, d) => { queries.Docs.dedupStateIncrDir(s, d); () }),
+    Build("m_incremental_history", Set("q_incremental_latest",
+        "q_incremental_compacted", "q_incremental_backfilled",
+        "q_incremental_prune", "q_dedup_incremental", "q_rollup_report",
+        "q_rollup_report_compacted", "q_quantile_hist", "q_psi_journal"),
+      (s, d) => queries.Incremental.ensureBuilt(s, d)),
+    Build("m_triangle_state",
+      Set("q_triangles_state", "q_clustering_coeff", "q_ktruss"),
+      (s, d) => { queries.Joins.triStateDir(s, d); () }),
   )
+
+  /** The builds at least one of `names` reads, in build order. */
+  def consumedBy(names: Iterable[String]): Seq[Build] =
+    builds.filter(b => names.exists(b.consumers))
+
+  /** Run, untimed, every build `names` reads at `dir`, so a timed run of
+    * a subset measures steady-state reads as the full suite does. A
+    * failing build is reported and skipped: its consumers then fail
+    * under their own names, and the other names still run.
+    */
+  def prebuild(spark: SparkSession, names: Iterable[String],
+      dir: String): Unit =
+    consumedBy(names).foreach { b =>
+      try b.run(spark, dir)
+      catch { case NonFatal(e) =>
+        System.err.println(s"PREBUILD ${b.name} FAILED ${e.getMessage}") }
+      finally Bench.resetState(spark)
+    }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dump `.explain("formatted")` output for named queries to files —
   * the optimization-round evidence artifact (plans/rNN/<query>_{before,
@@ -9,7 +9,14 @@ import org.apache.spark.sql.SparkSession
   * thing that executed), not the pre-AQE estimate; note that iterative
   * queries materialize their per-round plans behind localCheckpoint
   * boundaries, so the printed tree is the post-checkpoint tail — the
-  * per-round shape is pinned by GraphSpec/PlanSpec instead.
+  * per-round shape is pinned by GraphSpec/PlanSpec instead. Each line
+  * also carries the query's task-level shuffle writes, which the plan
+  * file cannot show (shuffles behind checkpoints and in subqueries).
+  * Pointing SPARK_GRAFT_SF_DIR at a scaled fixture compares plans across
+  * scales (a broadcast join turning sort-merge, a new exchange).
+  *
+  * A query that fails prints `PLANDUMP <name> FAILED <msg>` and the rest
+  * still dump; the exit code is non-zero if any failed.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> q_name [q_name ...]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
@@ -19,41 +26,39 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val names = args.drop(2).toSeq
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Bench.defaultCpus)
-    val spark = Bench.withBoundedStore(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Bench.envSfDir()
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sfDir))) {
+      val f = "f(\\d+)$".r.findFirstMatchIn(sfDir).fold("<factor>")(_.group(1))
+      System.err.println(s"PLANDUMP fixture $sfDir is missing; a scaled " +
+        s"fixture is built by `runMain graft.ScaleSuite $f q_name` " +
+        "(under /tmp/graft-sf1/f<factor>)")
+      sys.exit(2)
+    }
+    val spark = Bench.session(Bench.envCpus())
+    val tally = new Bench.ShuffleTally
+    spark.sparkContext.addSparkListener(tally)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    // Same pre-build gating as BenchOne so state-reading rows work alone.
-    if (names.exists(n =>
-        n.startsWith("q_incremental") || n == "q_dedup_incremental"))
-      queries.Incremental.ensureBuilt(spark, sfDir)
-    if (names.contains("q_join_bucketed"))
-      queries.Joins.ensureBucketed(spark, sfDir)
-    if (names.exists(Set("q_triangles_state", "q_clustering_coeff",
-        "q_ktruss")))
-      queries.Joins.triStateDir(spark, sfDir)
-    if (names.contains("q_dedup_state_kept"))
-      queries.Docs.dedupStateDir(spark, sfDir)
-    if (names.contains("q_dedup_state_incr"))
-      queries.Docs.dedupStateIncrDir(spark, sfDir)
-    names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      Bench.runToExhaustion(df)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),
-        txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(s"PLANDUMP wrote $outDir/${n}_$suffix.txt")
-      Bench.resetState(spark)
+    Materializations.prebuild(spark, names, sfDir)
+    val failed = names.filterNot { n =>
+      try {
+        val sh0 = tally.settled()
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        Bench.runToExhaustion(df)
+        val txt = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),
+          txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        println(s"PLANDUMP wrote $outDir/${n}_$suffix.txt  " +
+          s"shuffle=${(tally.settled() - sh0) / 1024}KB")
+        true
+      } catch {
+        case NonFatal(e) =>
+          println(s"PLANDUMP $n FAILED ${e.getMessage}")
+          false
+      } finally Bench.resetState(spark)
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Similarity}
@@ -40,16 +42,8 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val factors = (if (args.nonEmpty) args.mkString(",") else "1,2,4,8")
       .split(",").map(_.trim.toInt)
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Bench.defaultCpus)
-    val spark = Bench.withBoundedStore(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val base = Bench.envSfDir()
+    val spark = Bench.session(Bench.envCpus())
 
     val names = Seq("q_sim_neardup_lsh", "q_sim_ivf", "q_sim_recall",
       "q_dedup_clusters", "q_dedup_kept", "q_semdedup", "q_curation")
@@ -61,16 +55,22 @@ object ScaleBench {
     val analyticsNames = Seq("q_winsorize", "q_winsorize_approx",
       "q_basket_lift")
 
-    def timeOne(name: String, dir: String): Double = {
+    // None = the query failed: its row reads null and it joins the
+    // factor's `failed` list, and the remaining queries and factors run.
+    def timeOne(name: String, dir: String): Option[Double] = {
       Bench.resetState(spark)
       val t0 = System.nanoTime()
-      Bench.runToExhaustion(SparkEntry.queries(name)(spark, dir))
-      (System.nanoTime() - t0) / 1e9
+      try {
+        Bench.runToExhaustion(SparkEntry.queries(name)(spark, dir))
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case NonFatal(_) => None }
     }
 
-    // JVM/codegen warmup on the base fixture, untimed (Bench methodology)
+    // JVM/codegen warmup on the base fixture, untimed (Bench methodology);
+    // a failure here shows again in the timed run, which records it
     (names ++ analyticsNames).foreach(n =>
-      Bench.runToExhaustion(SparkEntry.queries(n)(spark, base)))
+      try Bench.runToExhaustion(SparkEntry.queries(n)(spark, base))
+      catch { case NonFatal(_) => () })
 
     // Rollup journal read-cost curve (once, base fixture): report cost is
     // O(groups × batches) by design; the measured curve is what motivates
@@ -260,9 +260,11 @@ object ScaleBench {
       val secs = (names ++ analyticsNames).map(n => n -> timeOne(n, dir))
       // Locale.ROOT: a comma decimal separator would corrupt the JSON.
       val qs = secs.map { case (k, v) =>
-        "\"" + k + "\":" +
-          String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+        "\"" + k + "\":" + v.fold("null")(d =>
+          String.format(java.util.Locale.ROOT, "%.3f", Double.box(d)))
       }.mkString("{", ",", "}")
+      val failed = secs.collect { case (k, None) => "\"" + k + "\"" }
+        .mkString("[", ",", "]")
       // brute_pairs: the all-pairs denominator the candidates are a
       // fraction of (queries × corpus for ANN; n² for near-dup)
       println(s"""{"factor":$f,"n_emb":$nEmb,"n_queries":$nQueries,""" +
@@ -288,7 +290,7 @@ object ScaleBench {
         s""","chunk_meta_sec":""" +
         String.format(java.util.Locale.ROOT, "%.3f",
           Double.box(chunkMetaSec)) +
-        s""","sec":$qs}""")
+        s""","sec":$qs,"failed":$failed}""")
     }
     spark.stop()
   }

@@ -25,7 +25,19 @@ import org.apache.spark.sql.SparkSession
   * as `timeout` — a quadratic blow-up gets NAMED, never stalls the
   * suite.
   *
-  * Usage: runMain graft.ScaleSuite [factor] (default 10)
+  * Every row also carries `prior_sec` and `x_vs_prior`: its scaled wall
+  * in the nearest committed ledger at or below `factor` (the one the
+  * pre-flight guards read), and this run's scaled wall over it — so a
+  * run at a new factor reads against the last decade without paying
+  * that decade's fixture again.
+  *
+  * Usage: runMain graft.ScaleSuite [factor] [q_name ...] (default 10)
+  *
+  * With query names (subset mode) only those queries and the builds
+  * they read ([[Materializations.consumedBy]]) run, under the same
+  * watchdog and estimator, and the line goes to `target/scale_subset.json`
+  * — never to a committed `BENCH_SF*.json` name.
+  *
   * Env: SPARK_GRAFT_SF_DIR (base, default sf0.1), SPARK_GRAFT_CPUS,
   *      SPARK_GRAFT_SCALE_TIMEOUT (sec/query, default 600 — raised from
   *      300 after the r16 f52 refresh ran at the default and
@@ -46,9 +58,7 @@ object ScaleSuite {
       cost: Bench.TaskSnap = Bench.TaskSnap(0L, -1L, -1L, -1L, -1L))
 
   /** Execute one thunk on a watchdog thread inside a cancellable job
-    * group; cancel at the deadline and record `timeout`. Shared by the
-    * full-registry suite and the targeted graph decade (ScaleGraph) so
-    * the two ledgers measure under ONE methodology. Returns the result
+    * group; cancel at the deadline and record `timeout`. Returns the result
     * plus the thread if it survived the bounded post-cancel join — a
     * zombie the caller must drain (its own ledger line) before the next
     * timed phase, or the stall gets billed to an innocent row.
@@ -111,11 +121,10 @@ object ScaleSuite {
     * Override with SPARK_GRAFT_SCALE_FORCE=1.
     *
     * `queryNames`: the QUERY set the caller will actually execute —
-    * a targeted run (ScaleGraph's graph family) must not be refused on
-    * the wall of a query it never runs, and a prior ledger's recorded
-    * timeout on an un-run query buys the caller no information either
-    * way. None = the full registry (ScaleSuite). Builds stay unfiltered:
-    * both harnesses run every priced materialization.
+    * a subset run must not be refused on the wall of a query it never
+    * runs, and a prior ledger's recorded timeout on an un-run query buys
+    * the caller no information either way. None = the full registry.
+    * Builds stay unfiltered (the conservative side).
     */
   private[graft] def timeoutGuard(priorLedger: String, timeoutSec: Long,
       ratio: Double = 1.0, queryNames: Option[Set[String]] = None)
@@ -226,8 +235,8 @@ object ScaleSuite {
 
   /** Nearest committed prior-decade ledger at or below `factor`: scan the
     * working directory for ScaleSuite ledger names (BENCH_SF{n} = factor
-    * 10n, BENCH_SFx{n} = factor n; ScaleGraph's *_graph ledgers have a
-    * different row shape and are excluded by the pattern) and return the
+    * 10n, BENCH_SFx{n} = factor n; the committed *_graph ledger has a
+    * different row shape and is excluded by the pattern) and return the
     * largest-factor match. This is what lets the guards fire on a FRESH
     * factor (the f104 attempt had no f104 ledger to read — only the f52
     * one that already predicted the failure).
@@ -250,9 +259,7 @@ object ScaleSuite {
     } finally listing.close()
   }
 
-  /** The executor-cost fields of one ledger row — shared with
-    * ScaleGraph so the two ledgers spell the breakdown identically.
-    */
+  /** The executor-cost fields of one ledger row (queries and builds). */
   private[graft] def costJson(prefix: String, r: Res): String =
     s""""${prefix}_cpu_ms":${r.cost.cpuMs},""" +
       s""""${prefix}_gc_ms":${r.cost.gcMs},""" +
@@ -265,6 +272,38 @@ object ScaleSuite {
   private[graft] def ledgerName(factor: Int): String =
     if (factor % 10 == 0) s"BENCH_SF${factor / 10}.json"
     else s"BENCH_SFx$factor.json"
+
+  /** Where a subset run writes: a partial ledger must never be read back
+    * as a committed decade by [[priorLedgerFile]].
+    */
+  private[graft] val subsetOut = "target/scale_subset.json"
+
+  /** Per-name (scaled_sec, scaled_shuffle) out of a committed ledger,
+    * skipping names the prior run recorded as scaled timeouts OR scaled
+    * failures (a timeout's `scaled` field is the watchdog cutoff and a
+    * failure's is time-to-crash with a partial shuffle — neither is a
+    * measurement a growth baseline may rest on). Query rows carry
+    * failure status only in the ledger-level `scaled_failed` array
+    * (their inline fields have no status), so both arrays are parsed.
+    */
+  private[graft] def priorScaled(ledger: String)
+      : Map[String, (Double, Long)] = {
+    def names(field: String): Set[String] =
+      (s""""$field":\\[([^\\]]*)\\]""").r
+        .findFirstMatchIn(ledger).map(_.group(1)).getOrElse("")
+        .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSet
+    val timedOut = names("scaled_timeout") ++ names("scaled_failed")
+    val row = ("\"([A-Za-z0-9_]+)\":\\{\"base\":[0-9.]+," +
+      "\"scaled\":([0-9.]+),([^{}]*?)\"scaled_shuffle\":([0-9]+)").r
+    row.findAllMatchIn(ledger).collect {
+      // materialization rows carry their status inline; query rows list
+      // timeouts in scaled_timeout — skip both kinds of non-measurement
+      case m if !timedOut.contains(m.group(1)) &&
+          !m.group(3).contains("\"scaled_status\":\"timeout\"") &&
+          !m.group(3).contains("\"scaled_status\":\"failed\"") =>
+        m.group(1) -> (m.group(2).toDouble, m.group(4).toLong)
+    }.toMap
+  }
 
   /** Queries whose DECLARED cost model is quadratic in the data factor —
     * exhaustive baselines kept under the oracle precisely so their
@@ -295,23 +334,31 @@ object ScaleSuite {
   def main(args: Array[String]): Unit = {
     val loadStart = Bench.loadavg()
     val factor = if (args.nonEmpty) args(0).toInt else 10
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val subset = args.drop(1).toSeq.distinct
+    val unknown = subset.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
+    val queryNames = Option(subset.toSet).filter(_.nonEmpty)
+    val base = Bench.envSfDir()
     val timeoutSec =
       sys.env.getOrElse("SPARK_GRAFT_SCALE_TIMEOUT", "600").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Bench.defaultCpus)
-    val out = ledgerName(factor)
-    val outPath = java.nio.file.Paths.get(out)
+    val outPath = java.nio.file.Paths.get(
+      if (subset.isEmpty) ledgerName(factor) else subsetOut)
     // Pre-flight guards against the NEAREST committed decade at or below
     // this factor (same-factor ledger when one exists): the dial guard
     // scaled by the factor ratio, plus the scratch-capacity guard — a
     // fresh factor with no own ledger (the r17 f104 burn) is exactly the
     // case where the smaller decade already predicts the failure.
+    val prior = priorLedgerFile(factor).map { case (priorFactor, path) =>
+      (priorFactor, path, new String(java.nio.file.Files.readAllBytes(path),
+        java.nio.charset.StandardCharsets.UTF_8))
+    }
     if (!sys.env.get("SPARK_GRAFT_SCALE_FORCE").contains("1")) {
-      priorLedgerFile(factor).foreach { case (priorFactor, path) =>
-        val ledger = new String(java.nio.file.Files.readAllBytes(path),
-          java.nio.charset.StandardCharsets.UTF_8)
+      prior.foreach { case (priorFactor, path, ledger) =>
         val ratio = factor.toDouble / priorFactor
-        timeoutGuard(ledger, timeoutSec, ratio)
+        timeoutGuard(ledger, timeoutSec, ratio, queryNames)
           .orElse(diskGuard(ledger, ratio,
             java.nio.file.Files.getFileStore(scratchPath()).getUsableSpace,
             executionMemoryBytes()))
@@ -322,14 +369,9 @@ object ScaleSuite {
           }
       }
     }
-    val spark = Bench.withBoundedStore(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val priorRows = prior.fold(Map.empty[String, (Double, Long)])(
+      p => priorScaled(p._3))
+    val spark = Bench.session(Bench.envCpus())
     val sc = spark.sparkContext
 
     val scaled = s"/tmp/graft-sf1/f$factor"
@@ -384,7 +426,11 @@ object ScaleSuite {
       runThunk(name, timeoutSec)(() =>
         Bench.runToExhaustion(SparkEntry.queries(name)(spark, dir)))
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names =
+      if (subset.isEmpty) SparkEntry.queries.keys.toSeq.sorted else subset.sorted
+    val builds =
+      if (subset.isEmpty) Materializations.builds
+      else Materializations.consumedBy(subset)
 
     // JIT/codegen warmup on the smallest fixture, untimed.
     names.foreach(n =>
@@ -402,8 +448,8 @@ object ScaleSuite {
       // amortized cost the README's "pay the shuffle once" claim rests
       // on. The builds warm the exact Scratch keys the consumer queries
       // read, so per-query rows keep measuring steady-state reads.
-      val mats = Materializations.builds.map { case (mn, build) =>
-        mn -> runThunk(mn, timeoutSec * 2)(() => build(spark, dir))
+      val mats = builds.map { b =>
+        b.name -> runThunk(b.name, timeoutSec * 2)(() => b.run(spark, dir))
       }.toMap
       // A timed-out build may leave its thread parked inside
       // Scratch.cached — verify it exited before any consumer row is
@@ -443,6 +489,14 @@ object ScaleSuite {
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
     def totalOf(m: Map[String, Res]): Double =
       m.values.collect { case r if r.status == "ok" => r.sec }.sum
+    // Appended after each row's last field, so every ledger regex that
+    // anchors on the earlier fields still matches.
+    def priorJson(n: String, r: Res): String = {
+      val p = priorRows.get(n).map(_._1)
+      val x = p.collect { case ps if ps > 0 && r.status == "ok" =>
+        fmt(r.sec / ps) }.getOrElse("null")
+      s""","prior_sec":${p.fold("null")(fmt)},"x_vs_prior":$x"""
+    }
 
     val perQuery = names.map { n =>
       val b = baseRes(n); val s = scaledRes(n)
@@ -471,7 +525,7 @@ object ScaleSuite {
         s""""base_shuffle":${b.shuffle},"scaled_shuffle":${s.shuffle},""" +
         s""""x_shuffle":$xs,""" +
         costJson("base", b) + "," + costJson("scaled", s) +
-        s""","x_cpu":$xc}"""
+        s""","x_cpu":$xc""" + priorJson(n, s) + "}"
     }.mkString("{", ",", "}")
 
     // Superlinear flag: materially above the growth the query's declared
@@ -516,12 +570,15 @@ object ScaleSuite {
     }
     val superlinearShuffle =
       names.filter(n => !quadraticBaselines.contains(n) && shuffleOverBudget(n))
-    val quadJson = quadraticBaselines.toSeq.sorted.map { case (n, twin) =>
-      def xOf(q: String): String = {
-        val b = baseRes(q); val s = scaledRes(q)
-        if (b.status == "ok" && s.status == "ok" && b.sec > 0)
-          fmt(s.sec / b.sec) else "null"
-      }
+    val quadJson = quadraticBaselines.toSeq.sorted
+        .filter { case (n, _) => names.contains(n) }.map { case (n, twin) =>
+      // a subset run may not include the twin: its growth reads null
+      def xOf(q: String): String =
+        if (!names.contains(q)) "null" else {
+          val b = baseRes(q); val s = scaledRes(q)
+          if (b.status == "ok" && s.status == "ok" && b.sec > 0)
+            fmt(s.sec / b.sec) else "null"
+        }
       s""""$n":{"twin":"$twin","x":${xOf(n)},"twin_x":${xOf(twin)},""" +
         s""""over_budget":${overBudget(n)}}"""
     }.mkString("{", ",", "}")
@@ -530,7 +587,7 @@ object ScaleSuite {
     // lists — a build's exponent is its family's documented cost model
     // (the wedge join is the suite's largest shuffle by design); the gate
     // is that the number EXISTS as a committed ledger line.
-    val matJson = Materializations.builds.map(_._1).map { mn =>
+    val matJson = builds.map(_.name).map { mn =>
       val b = baseMats(mn); val s = scaledMats(mn)
       val x = if (b.status == "ok" && s.status == "ok" && b.sec > 0)
         fmt(s.sec / b.sec) else "null"
@@ -540,7 +597,8 @@ object ScaleSuite {
         s""""base_status":"${b.status}","scaled_status":"${s.status}",""" +
         s""""base_shuffle":${b.shuffle},"scaled_shuffle":${s.shuffle},""" +
         s""""x_shuffle":$xs,""" +
-        costJson("base", b) + "," + costJson("scaled", s) + "}"
+        costJson("base", b) + "," + costJson("scaled", s) +
+        priorJson(mn, s) + "}"
     }.mkString("{", ",", "}")
     def lst(ns: Seq[String]) = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     val failed = names.filter(n => scaledRes(n).status == "failed")
@@ -558,6 +616,7 @@ object ScaleSuite {
       s""""base_total":${fmt(totalOf(baseRes))},""" +
       s""""scaled_total":${fmt(totalOf(scaledRes))},""" +
       s""""timeout_sec":$timeoutSec,"scaled_rows":$rows,""" +
+      s""""prior_ledger":${prior.fold("null")(p => s"\"${p._2.getFileName}\"")},""" +
       s""""base_not_ok":${lst(baseBad)},"scaled_failed":${lst(failed)},""" +
       s""""scaled_timeout":${lst(timedOut)},""" +
       s""""superlinear":${lst(superlinear)},""" +

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Targeted correctness dump: re-run only the NAMED queries into an
   * existing [[Verify]] output directory (results + refreshed
@@ -13,15 +12,7 @@ object VerifyOne {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Bench.withBoundedStore(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.envCpus(default = "4"))
     new java.io.File(outDir).mkdirs()
     // Fail fast on a typo'd name BEFORE dumping anything: a partial dump
     // with exit 0 would leave stale parquet for the misspelled query

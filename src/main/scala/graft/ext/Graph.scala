@@ -27,25 +27,12 @@ object Graph {
     * file stay on the default, where object form is cheap and saves
     * per-read deserialization.
     *
-    * The trade's cost side — per-round re-reads pay deserialization
-    * CPU — is a measured dial, not a constant: set the
-    * `spark.graft.graph.storage` system property (or the
-    * SPARK_GRAFT_GRAPH_STORAGE env) to `deser` to restore the
-    * deserialized default where the aggregate edge working set is known
-    * to fit storage memory (the r19 f78 A/B ledger
-    * BENCH_SFx78_storage_ab.json prices both sides on the same
-    * fixture). `ser` stays the default: it is the setting that survives
-    * every measured scale on this box, and on a cluster the same choice
-    * applies per-executor under the same fits-in-storage test.
+    * The cost is deserialization CPU on every per-round re-read. It is a
+    * constant, not a setting: the deserialized level is the one that ran
+    * out of heap at f78.
     */
-  private[ext] def edgeStorage: org.apache.spark.storage.StorageLevel = {
-    val mode = sys.props.get("spark.graft.graph.storage")
-      .orElse(sys.env.get("SPARK_GRAFT_GRAPH_STORAGE"))
-      .getOrElse("ser")
-    if (mode == "deser")
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-  }
+  private[ext] val edgeStorage: org.apache.spark.storage.StorageLevel =
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   /** Directed edge set normalized to (src, dst) longs, deduplicated and
     * checkpointed — the shared build + null guard of the pagerank/HITS/

@@ -389,7 +389,7 @@ object Docs {
     // is map-side, the count is one partial+final hash-agg, and the top-k
     // is TakeOrderedAndProject (no global sort of the vocabulary).
     // Scale note: the r13 ledger flagged this row 15.4× at factor 10; in
-    // isolation (ScaleOne, same fixtures) it measures 1.13× — the excess
+    // isolation (same fixtures) it measures 1.13× — the excess
     // was suite-order GC debt inherited from the graph family's multi-GB
     // shuffles that precede it alphabetically, fixed in ScaleSuite by
     // min-of-two-runs timing + a collect between queries.

@@ -82,7 +82,7 @@ class ScaleGuardSpec extends AnyFunSuite {
       """"base_pre":1.0,"base_timed":1.0,"scaled_pre":null,""" +
       """"scaled_timed":null,"base_shuffle":3,"scaled_shuffle":0,""" +
       """"x_shuffle":null}}}"""
-    val p = ScaleGraph.priorScaled(l)
+    val p = ScaleSuite.priorScaled(l)
     assert(p == Map("m_ok" -> ((103.2, 88L)), "q_ok" -> ((9.8, 207L))), p)
   }
 
@@ -199,7 +199,7 @@ class ScaleGuardSpec extends AnyFunSuite {
       "(query failures are recorded only in the ledger-level array)") {
     val l = ledgerWithQuery(600, 103.2, "q_crashed", 77.7,
       failed = Seq("q_crashed"))
-    val p = ScaleGraph.priorScaled(l)
+    val p = ScaleSuite.priorScaled(l)
     assert(!p.contains("q_crashed"), p)
     assert(p.contains("m_triangle_state"), p)
   }
@@ -218,6 +218,17 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(ScaleSuite.priorLedgerFile(26, dir).map(_._1) === Some(26))
     assert(ScaleSuite.priorLedgerFile(11, dir).map(_._1) === Some(10))
     assert(ScaleSuite.priorLedgerFile(9, dir).isEmpty)
+  }
+
+  test("a subset run's output is never read back as a prior ledger") {
+    val dir = java.nio.file.Files.createTempDirectory("ledgers")
+    val out = java.nio.file.Paths.get(ScaleSuite.subsetOut).getFileName
+    java.nio.file.Files.write(dir.resolve(out),
+      "{}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Seq(1, 2, 10, 52, 104, 1000).foreach { f =>
+      assert(ScaleSuite.priorLedgerFile(f, dir).isEmpty, f)
+      assert(ScaleSuite.ledgerName(f) != ScaleSuite.subsetOut, f)
+    }
   }
 
   test("ledgerName maps decade factors onto effective-SF names") {
