@@ -196,9 +196,12 @@ object Bench {
     * time 5-10x their isolated cost (round-3 verdict: q_decontamination
     * 22.7 s in-suite vs 2.6 s isolated). Runs OUTSIDE the timer: cleanup of
     * the previous query's debris is not part of the next query's cost.
+    * Blocks go through [[org.apache.spark.sql.graft.BlockRelease]], which
+    * drops a locally checkpointed RDD without a warning per RDD.
     */
   private[graft] def resetState(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(org.apache.spark.sql.graft.BlockRelease(_))
     spark.catalog.clearCache()
     // Broadcast vars and shuffle files are reclaimed by the ContextCleaner
     // only after their refs are GC'd; this suite generates almost no heap

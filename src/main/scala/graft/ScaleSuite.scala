@@ -187,12 +187,24 @@ object ScaleSuite {
     * largest scaled shuffle by the factor ratio, estimate the peak, and
     * refuse — with the arithmetic printed — when it exceeds the scratch
     * filesystem's free bytes. Override with SPARK_GRAFT_SCALE_FORCE=1.
+    *
+    * `queryNames`: as in [[timeoutGuard]], the queries the caller will
+    * run (None = the full registry). Only their rows and the rows of the
+    * builds they read ([[Materializations.consumedBy]]) count: a subset
+    * that reads no `m_triangle_state` must not be refused on that build's
+    * wedge shuffle.
     */
   private[graft] def diskGuard(priorLedger: String, ratio: Double,
-      freeBytes: Long, execBytes: Long): Option[String] = {
-    val maxShuffle = """"scaled_shuffle":(\d+)""".r
-      .findAllMatchIn(priorLedger).map(_.group(1).toLong)
-      .foldLeft(0L)(math.max)
+      freeBytes: Long, execBytes: Long,
+      queryNames: Option[Set[String]] = None): Option[String] = {
+    val counted = queryNames.map(q =>
+      q ++ Materializations.consumedBy(q).map(_.name))
+    val maxShuffle =
+      """"([A-Za-z0-9_]+)":\{"base":[^{}]*?"scaled_shuffle":(\d+)""".r
+        .findAllMatchIn(priorLedger)
+        .collect { case m if counted.forall(_.contains(m.group(1))) =>
+          m.group(2).toLong }
+        .foldLeft(0L)(math.max)
     val est = maxShuffle * ratio
     val spillWave = math.max(0.0, est - execBytes)
     val peak = est + spillWave
@@ -361,7 +373,7 @@ object ScaleSuite {
         timeoutGuard(ledger, timeoutSec, ratio, queryNames)
           .orElse(diskGuard(ledger, ratio,
             java.nio.file.Files.getFileStore(scratchPath()).getUsableSpace,
-            executionMemoryBytes()))
+            executionMemoryBytes(), queryNames))
           .foreach { reason =>
             System.err.println(s"REFUSING factor-$factor decade " +
               s"(prior: factor-$priorFactor ${path.getFileName}): $reason")

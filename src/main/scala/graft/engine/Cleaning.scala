@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.StampExprs
+
 /** The reference's cleaning layer (SURVEY §2.8 F1-F7, §2.4 A4), re-expressed
   * as one lazy Catalyst projection instead of per-page pandas mutation.
   *
@@ -90,17 +92,25 @@ object Cleaning {
     * The instant is taken ONCE, on the driver, when the frame is built:
     * every query over the result (the analytics write, the audit
     * side-output) sees the same `loaded_at`, where `current_timestamp()`
-    * would give each query its own. Both columns are literals, inlined
-    * into generated code: a load on a new instant compiles its projections
-    * again. `load_date` must stay a foldable date literal, because a
-    * partitioned write on a constant column needs no sort.
+    * would give each query its own. `loaded_at` reaches generated code by
+    * reference ([[graft.functions.LoadStamp]]), so a load at a new instant
+    * reuses the classes an earlier load compiled. `load_date` stays a
+    * foldable date literal, because a partitioned write on a constant
+    * column needs no sort; a new day therefore compiles the projections
+    * that carry it again, which is why [[Pipeline.appendCleaned]] drops it
+    * and writes its day's directory instead.
     */
   def withLoadMetadata(df: DataFrame, at: Option[java.sql.Timestamp] = None)
       : DataFrame = {
-    val ts = at.getOrElse(java.sql.Timestamp.from(java.time.Instant.now()))
-    df.withColumn("loaded_at", lit(ts))
+    val ts = stamp(at)
+    df.withColumn("loaded_at", StampExprs.loadStamp(ts))
       .withColumn("load_date", lit(loadDay(df.sparkSession, ts)))
   }
+
+  /** The instant a load is stamped with: `at`, else now. */
+  private[engine] def stamp(at: Option[java.sql.Timestamp])
+      : java.sql.Timestamp =
+    at.getOrElse(java.sql.Timestamp.from(java.time.Instant.now()))
 
   /** The `load_date` of a load stamped `at`: `to_date(loaded_at)` in the
     * session time zone, computed on the driver.

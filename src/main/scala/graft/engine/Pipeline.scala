@@ -97,11 +97,21 @@ object Pipeline {
   }
 
   /** The shared append step of the incremental load: reference-ordered
-    * cleaning, partitioned append, schema-sidecar journal. Called by
-    * [[loadIncremental]] (batch) and per micro-batch by
+    * cleaning, an append of the load's day, schema-sidecar journal. Called
+    * by [[loadIncremental]] (batch) and per micro-batch by
     * [[graft.streaming.Streams.startIncrementalLoad]] — ONE code path, so
     * the streaming-ingested table is byte-identical to the batch one for
     * the same input batches.
+    *
+    * The batch is written into its day's directory,
+    * `<dir>/load_date=<Cleaning.loadDay>`, without the `load_date` column,
+    * as the static-partition insert `INSERT … PARTITION (load_date=…)`
+    * does; the layout is the one `partitionBy("load_date")` writes,
+    * except that a zero-row batch leaves one empty file carrying the
+    * schema where `partitionBy` left none. With the day out of the data
+    * and `loaded_at` read by reference, the generated code of an append
+    * depends on neither the instant nor the day, so a JVM compiles it
+    * once for all its loads.
     *
     * Returns the number of rows actually WRITTEN (post-cleaning — cleaning
     * dedups exact duplicates, so this can be smaller than the input batch),
@@ -113,20 +123,37 @@ object Pipeline {
     */
   def appendCleaned(batch: DataFrame, analyticsDir: String,
       at: Option[java.sql.Timestamp] = None): Long = {
-    val cleaned = Cleaning.cleanAll(batch, at)
+    val spark = batch.sparkSession
+    val ts = Cleaning.stamp(at)
+    val cleaned = Cleaning.cleanAll(batch, Some(ts))
     val obs = org.apache.spark.sql.Observation()
-    cleaned.observe(obs, count(lit(1)).as("rows_written"))
+    cleaned.drop("load_date")
+      .observe(obs, count(lit(1)).as("rows_written"))
       .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("load_date").parquet(analyticsDir)
-    // Journal the schema beside the data: a zero-row append writes no
-    // parquet footers, so without this a freshly-created (or so-far-empty)
-    // table is unreadable — the plain-parquet stand-in for the schema
-    // journal a table format (Delta/Iceberg) keeps. Written on EVERY load:
+      .parquet(dayDir(spark, analyticsDir, ts))
+    // Journal the schema beside the data — the plain-parquet stand-in for
+    // the schema journal a table format (Delta/Iceberg) keeps: readers take
+    // the table's schema from it instead of sampling one footer, which
+    // after a widened batch may be an old one. Written on EVERY load:
     // idempotent when unchanged, and it tracks evolution when the batch
     // schema widens.
-    writeSchemaSidecar(batch.sparkSession, analyticsDir,
-      readBackSchema(cleaned.schema))
+    writeSchemaSidecar(spark, analyticsDir, readBackSchema(cleaned.schema))
     obs.get("rows_written").asInstanceOf[Long]
+  }
+
+  /** The `load_date=<day>` directory under `dir` that holds a load stamped
+    * `at`, named by Spark's own partition-path helper from the day's string
+    * cast — the rendering a `partitionBy("load_date")` write uses.
+    */
+  private def dayDir(spark: SparkSession, dir: String,
+      at: java.sql.Timestamp): String = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    val day = Cast(Literal(Cleaning.loadDay(spark, at)),
+      org.apache.spark.sql.types.StringType,
+      Some(spark.conf.get("spark.sql.session.timeZone"))).eval().toString
+    ExternalCatalogUtils.generatePartitionPath(Map("load_date" -> day),
+      Seq("load_date"), new org.apache.hadoop.fs.Path(dir)).toString
   }
 
   /** Backfill ONE day of an incrementally-loaded table: re-clean the

@@ -9,8 +9,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Spark 4 routes Column through ColumnNode, and the converters
   * (`classic.ExpressionUtils`) are `private[sql]` — the standard pattern
   * for extension libraries shipping custom expressions is one bridge
-  * object inside the `org.apache.spark.sql` package tree. This is the only
-  * file outside the `graft` namespace.
+  * object inside the `org.apache.spark.sql` package tree. This package
+  * (with [[BlockRelease]]) is the only main code outside the `graft`
+  * namespace.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.{Cleaning, Pipeline}
 import graft.ext.{Dedup, Graph, Similarity}
 
 /** Generated code is compiled once per session: running an operator a
@@ -73,5 +74,51 @@ class CodegenReuseSpec extends AnyFunSuite {
         "vec_id", "embedding", 4).collect()
     }
     assert(n == 0, s"$n classes compiled again")
+  }
+
+  /** A small CDC-shaped batch, built fresh on every call like a new
+    * delta: strings to trim and fill, a number to fill, a date to parse.
+    */
+  private def delta(shift: Int) = {
+    import spark.implicits._
+    Seq((Option(1 + shift), Option(" CA "), Option("2024-01-02")),
+      (Option(2 + shift), None, Option("not-a-date")),
+      (None, Option("NY"), None))
+      .toDF("yearstart", "location", "report_date")
+  }
+
+  test("appendCleaned compiles nothing on its second run, a day later") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-reuse-append")
+    try {
+      var day = 0L
+      val n = secondRunCompiles {
+        day += 1
+        Pipeline.appendCleaned(delta(day.toInt), dir.resolve("t").toString,
+          Some(java.sql.Timestamp.from(java.time.Instant
+            .parse("2024-03-01T10:11:12.345678Z").plusSeconds(86400 * day))))
+      }
+      assert(n == 0, s"$n classes compiled again")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("Pipeline.load compiles nothing on a second run at a new instant") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-reuse-load")
+    try {
+      val staging = dir.resolve("staging").toString
+      delta(0).write.parquet(staging)
+      def today = Cleaning.loadDay(spark,
+        java.sql.Timestamp.from(java.time.Instant.now()))
+      // load stamps the wall clock; a run that straddles midnight loads
+      // two days, and the new day's load_date literal is new code
+      def measure(): Option[Long] = {
+        val d0 = today
+        val n = secondRunCompiles {
+          Pipeline.load(spark, staging, dir.resolve("out").toString)
+        }
+        if (today == d0) Some(n) else None
+      }
+      val n = measure().orElse(measure()).get
+      assert(n == 0, s"$n classes compiled again")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }

@@ -98,4 +98,16 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(j5 - j2 == 3 * 3, s"$j2 jobs at 2 rounds, $j5 at 5")
     assert(j2 <= 6 + 3 * 2, s"$j2 jobs at 2 rounds")
   }
+
+  test("appendCleaned: at most 2 jobs (the dedup shuffle and the write)") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-budget-append")
+    try {
+      val n = jobs(graft.engine.Pipeline.appendCleaned(
+        Seq((1L, " a "), (1L, " a "), (2L, "b")).toDF("id", "s"),
+        dir.resolve("t").toString,
+        Some(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))))
+      assert(n <= 2, s"$n jobs")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

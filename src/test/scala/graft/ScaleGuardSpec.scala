@@ -181,6 +181,24 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(ScaleSuite.diskGuard(prior, 2.0, 10 * free, exec).isEmpty)
   }
 
+  test("diskGuard with queryNames counts only the subset's rows and the " +
+      "builds they read") {
+    // m_triangle_state's 26.8 GB wedge shuffle refuses the full registry;
+    // q_pagerank (0.44 GB) reads no build, so its subset passes, while a
+    // subset with a triangle-state consumer is still judged on the build
+    val prior = ledgerWithQuery(600, 871.2, "q_pagerank", 30.0)
+    val free = 76L * 1000 * 1000 * 1000
+    val exec = 15L * 1000 * 1000 * 1000
+    assert(ScaleSuite.diskGuard(prior, 2.0, free, exec).isDefined)
+    assert(ScaleSuite.diskGuard(prior, 2.0, free, exec,
+      queryNames = Some(Set("q_pagerank"))).isEmpty)
+    assert(ScaleSuite.diskGuard(prior, 2.0, free, exec,
+      queryNames = Some(Set("q_pagerank", "q_ktruss"))).isDefined)
+    // the subset's own row still counts: 0.44 GB x 200 = 88 GB shuffle
+    assert(ScaleSuite.diskGuard(prior, 200.0, free, exec,
+      queryNames = Some(Set("q_pagerank"))).isDefined)
+  }
+
   test("the REAL committed f52 ledger authorizes the documented f78 dial " +
       "and refuses the documented f104 disk burn") {
     val f52 = new String(java.nio.file.Files.readAllBytes(

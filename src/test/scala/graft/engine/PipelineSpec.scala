@@ -208,6 +208,68 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after.toSeq == latest.toSeq)
   }
 
+  test("two appends on one day land in one load_date= directory, and " +
+      "readLatest sees both") {
+    import java.sql.Timestamp
+    import spark.implicits._
+    val analytics = root.resolve("same-day").toString
+    Pipeline.appendCleaned(Seq((1L, "v1"), (2L, "v1")).toDF("id", "payload"),
+      analytics, Some(Timestamp.valueOf("2024-01-01 08:00:00")))
+    Pipeline.appendCleaned(Seq((2L, "v2"), (3L, "v1")).toDF("id", "payload"),
+      analytics, Some(Timestamp.valueOf("2024-01-01 17:30:00.25")))
+    val days = new java.io.File(analytics).listFiles()
+      .filter(_.getName.startsWith("load_date=")).map(_.getName).toSeq
+    assert(days == Seq("load_date=2024-01-01"), days)
+    assert(Pipeline.readTable(spark, analytics).count() == 4)
+    val latest = Pipeline.readLatest(spark, analytics, Seq("id"))
+      .select("id", "payload").as[(Long, String)].collect().sortBy(_._1)
+    assert(latest.toSeq == Seq((1L, "v1"), (2L, "v2"), (3L, "v1")))
+  }
+
+  test("a zero-row append followed by a non-empty one on the same day") {
+    import java.sql.Timestamp
+    import spark.implicits._
+    val analytics = root.resolve("empty-then-rows").toString
+    val batch = Seq((1L, "v1"), (2L, "v1")).toDF("id", "payload")
+    assert(Pipeline.appendCleaned(batch.limit(0), analytics,
+      Some(Timestamp.valueOf("2024-01-01 08:00:00"))) == 0L)
+    assert(Pipeline.readTable(spark, analytics).count() == 0)
+    assert(Pipeline.appendCleaned(batch, analytics,
+      Some(Timestamp.valueOf("2024-01-01 09:00:00"))) == 2L)
+    val t = Pipeline.readTable(spark, analytics)
+    assert(t.columns.toSeq == Seq("id", "payload", "loaded_at", "load_date"))
+    assert(t.select(col("id"), col("load_date").cast("string"))
+      .as[(Long, String)].collect().toSet ==
+      Set((1L, "2024-01-01"), (2L, "2024-01-01")))
+    assert(Pipeline.readLatest(spark, analytics, Seq("id")).count() == 2)
+  }
+
+  test("the table root holds only load_date=* directories and the schema " +
+      "sidecar; readers ignore _SUCCESS wherever it lands") {
+    import java.sql.Timestamp
+    import spark.implicits._
+    val analytics = root.resolve("root-listing").toString
+    for ((at, id) <- Seq("2024-01-01 08:00:00", "2024-01-02 08:00:00",
+        "2024-01-02 09:00:00").zipWithIndex)
+      Pipeline.appendCleaned(Seq((id.toLong, "v")).toDF("id", "payload"),
+        analytics, Some(Timestamp.valueOf(at)))
+    // dot files are the local file system's checksums, hidden like the
+    // files they check
+    val entries = new java.io.File(analytics).listFiles()
+      .filterNot(_.getName.startsWith(".")).toSeq
+    val (dirs, files) = entries.partition(_.isDirectory)
+    assert(dirs.map(_.getName).sorted ==
+      Seq("load_date=2024-01-01", "load_date=2024-01-02"), entries)
+    assert(files.map(_.getName) == Seq("_graft_schema.json"), entries)
+    // a plain inferring read sees only the rows, whatever _SUCCESS files
+    // the commits left in the day directories
+    val plain = spark.read.parquet(analytics)
+    assert(plain.columns.toSeq == Seq("id", "payload", "loaded_at",
+      "load_date"))
+    assert(plain.count() == 3)
+    assert(Pipeline.readTable(spark, analytics).count() == 3)
+  }
+
   test("readLatestOr falls back to the schema frame on a data-less table") {
     import java.sql.Timestamp
     import spark.implicits._
