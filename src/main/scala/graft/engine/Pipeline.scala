@@ -172,7 +172,6 @@ object Pipeline {
     */
   def backfillDay(batch: DataFrame, analyticsDir: String,
       at: java.sql.Timestamp): Long = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
     // the day Cleaning.withLoadMetadata writes as load_date (the SESSION
     // timezone) — a JVM-default-TZ conversion here could name a different
@@ -190,28 +189,16 @@ object Pipeline {
       .partitionBy("load_date").parquet(analyticsDir)
     writeSchemaSidecar(spark, analyticsDir, readBackSchema(cleaned.schema))
     val written = obs.get("rows_written").asInstanceOf[Long]
-    val ledger = new Path(analyticsDir, "_graft_commits")
-    val fs = ledger.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(ledger)) {
+    val commits = Commits(spark, analyticsDir)
+    if (commits.hasLedger(analyticsDir)) {
       // Deltas ACCUMULATE across repeated backfills of the same day: the
       // marker holds Σ deltas, which telescopes to (current day rows −
       // originally ledgered day rows) — overwriting with only the latest
       // delta would silently break the audit on the second repair.
-      val marker = new Path(ledger, s"_backfill_$day")
-      val prior =
-        if (!fs.exists(marker)) 0L
-        else {
-          val in = fs.open(marker)
-          val body = try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-          """"rows":(-?\d+)""".r.findFirstMatchIn(body)
-            .map(_.group(1).toLong).getOrElse(0L)
-        }
-      val out = fs.create(marker, true)
-      try out.write(
-        s"""{"batchId":"_backfill_$day","rows":${prior + written - oldRows}}"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      val marker = commits.marker(analyticsDir, s"_backfill_$day")
+      val prior = commits.readUtf8(marker).flatMap(Commits.rows).getOrElse(0L)
+      commits.writeUtf8(marker,
+        s"""{"batchId":"_backfill_$day","rows":${prior + written - oldRows}}""")
     }
     written
   }
@@ -234,34 +221,21 @@ object Pipeline {
   }
 
   private def writeSchemaSidecar(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir, SidecarName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    Commits(spark, dir).writeUtf8(sidecar(dir), schema.json)
+
+  private def sidecar(dir: String) =
+    new org.apache.hadoop.fs.Path(dir, SidecarName)
 
   /** Schema journaled by [[loadIncremental]], if the table has one. Missing
     * file → None (pre-sidecar table or foreign dir); a PRESENT but
     * unparseable sidecar throws — that is corruption, not absence.
     */
   def sidecarSchema(spark: SparkSession, dir: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir, SidecarName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val json =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(json)
+      : Option[org.apache.spark.sql.types.StructType] =
+    Commits(spark, dir).readUtf8(sidecar(dir)).map(json =>
+      org.apache.spark.sql.types.DataType.fromJson(json)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
-  }
 
   /** Read an incrementally-loaded table. When the table carries a schema
     * sidecar, the READ USES IT as the explicit schema — this is what makes
@@ -322,93 +296,41 @@ object Pipeline {
     * current-state view back to a single partition set, bounding read
     * amplification (readers stop re-deduping a growing history).
     *
-    * Swap protocol: write to `<dir>.compact-tmp`, move the live dir to
-    * `<dir>.compact-old`, move tmp into place, drop old. Every step is
-    * checked; on a failed swap the original is restored. No point in the
-    * sequence has the data been deleted before its replacement is fully
-    * written — a crash mid-swap leaves the table recoverable from
-    * `.compact-old`/`.compact-tmp` rather than destroyed.
+    * The rewrite lands through [[Commits.swap]] (`<dir>.compact-tmp`,
+    * `<dir>.compact-old`): no point in the sequence has the data been
+    * deleted before its replacement is fully written, and a crash mid-swap
+    * is recovered by the next call rather than destroying the table.
     */
   def compact(spark: SparkSession, analyticsDir: String,
       keys: Seq[String]): StageReport = {
-    import org.apache.hadoop.fs.Path
-    val pLive = new Path(analyticsDir)
-    val pTmp = new Path(analyticsDir + ".compact-tmp")
-    val pOld = new Path(analyticsDir + ".compact-old")
-    val fsEntry = pLive.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverStrandedSwap(fsEntry, pLive, pOld) match {
-      case Some(err) => return StageReport("compact", ok = false, err)
-      case None => ()
+    val commits = Commits(spark, analyticsDir)
+    val err = commits.swap(analyticsDir, ".compact") { tmp =>
+      // readTable, not readLatest: a table holding only zero-row appends
+      // (sidecar, no data files) compacts to an empty table instead of
+      // dying on the schema probe.
+      val latest = latestOf(readTable(spark, analyticsDir), keys)
+      val obs = org.apache.spark.sql.Observation()
+      latest.observe(obs, count(lit(1)).as("rows_compacted"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("load_date").parquet(tmp)
+      // Carry the schema journal through the swap — `latest` is already a
+      // read-back frame, so its schema is the observed (partition-col-last)
+      // shape the sidecar contract requires.
+      writeSchemaSidecar(spark, tmp, latest.schema)
+      // Carry the commit ledger through the swap, re-seeded: every batch
+      // marker keeps its idempotence claim (a post-compact replay of an
+      // old batchId must still be a no-op) but its row count is rewritten
+      // to 0, because compaction just collapsed those rows — a single
+      // `_compaction` marker holding the compacted table count keeps
+      // [[graft.streaming.Streams.ledgerConsistent]] exact.
+      if (commits.carryLedger(analyticsDir, tmp)((name, _) =>
+          s"""{"batchId":"$name","rows":0,"compacted":true}"""))
+        commits.writeUtf8(commits.marker(tmp, "_compaction"),
+          s"""{"batchId":"_compaction","rows":${obs.get("rows_compacted")}}""")
     }
-    // readTable, not readLatest: a table holding only zero-row appends
-    // (sidecar, no data files) compacts to an empty table instead of dying
-    // on the schema probe.
-    val latest = latestOf(readTable(spark, analyticsDir), keys)
-    val obs = org.apache.spark.sql.Observation()
-    latest.observe(obs, count(lit(1)).as("rows_compacted"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("load_date").parquet(pTmp.toString)
-    // Carry the schema journal through the swap — `latest` is already a
-    // read-back frame, so its schema is the observed (partition-col-last)
-    // shape the sidecar contract requires.
-    writeSchemaSidecar(spark, pTmp.toString, latest.schema)
-    val fs = pLive.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Carry the streaming commit ledger through the swap, re-seeded:
-    // every batch marker keeps its idempotence claim (a post-compact
-    // replay of an old batchId must still be a no-op) but its row count
-    // is rewritten to 0, because compaction just collapsed those rows —
-    // a single `_compaction` marker holding the compacted table count
-    // keeps [[graft.streaming.Streams.ledgerConsistent]] exact. Without
-    // this the swap would drop `_graft_commits` entirely, losing both the
-    // idempotence markers and the audit.
-    val ledgerLive = new Path(pLive, "_graft_commits")
-    if (fs.exists(ledgerLive)) {
-      val ledgerTmp = new Path(pTmp, "_graft_commits")
-      fs.mkdirs(ledgerTmp)
-      fs.listStatus(ledgerLive).filter(_.isFile).foreach { st =>
-        val out = fs.create(new Path(ledgerTmp, st.getPath.getName), true)
-        try out.write(
-          s"""{"batchId":"${st.getPath.getName}","rows":0,"compacted":true}"""
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      val rows = obs.get("rows_compacted").asInstanceOf[Long]
-      val out = fs.create(new Path(ledgerTmp, "_compaction"), true)
-      try out.write(s"""{"batchId":"_compaction","rows":$rows}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    fs.delete(pOld, true)
-    if (!fs.rename(pLive, pOld))
-      return StageReport("compact", ok = false,
-        s"could not stage current table aside; table untouched")
-    if (!fs.rename(pTmp, pLive)) {
-      val restored = fs.rename(pOld, pLive)
-      return StageReport("compact", ok = false,
-        if (restored) "swap failed; original restored"
-        else s"swap failed AND restore failed — table stranded at $pOld")
-    }
-    fs.delete(pOld, true)
-    StageReport("compact", ok = true, s"compacted $analyticsDir")
+    StageReport("compact", ok = err.isEmpty,
+      err.getOrElse(s"compacted $analyticsDir"))
   }
-
-  /** Crash recovery for the two-rename swap [[compact]]/[[applyChanges]]
-    * use: if a previous run died between "live moved aside" and
-    * "replacement moved in", the data sits in `<dir><oldSuffix>` while the
-    * live path is missing. Detect that exact state on entry and restore
-    * the original before proceeding — any other combination (live exists,
-    * or no old dir) is left alone. Returns an error string if recovery
-    * itself fails.
-    */
-  private[graft] def recoverStrandedSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path,
-      old: org.apache.hadoop.fs.Path): Option[String] =
-    if (!fs.exists(live) && fs.exists(old)) {
-      if (fs.rename(old, live)) None
-      else Some(s"found stranded swap ($old exists, $live missing) " +
-        "but could not restore it")
-    } else None
 
   /** Apply a CDC change batch to a parquet snapshot atomically — the
     * MERGE INTO maintenance op (the batch form is oracle-checked as
@@ -435,58 +357,35 @@ object Pipeline {
   def applyChanges(spark: SparkSession, snapshotDir: String,
       changes: DataFrame, keyCol: String, opCol: String = "op",
       seqCol: String = "seq"): StageReport = {
-    import org.apache.hadoop.fs.Path
-    // A crash between the two swap renames below leaves the snapshot in
-    // .merge-old with no live dir; recover it before reading, or the
-    // stranded state would persist until a human notices the read failing.
-    val fsEntry = new Path(snapshotDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverStrandedSwap(fsEntry, new Path(snapshotDir),
-        new Path(snapshotDir + ".merge-old")) match {
-      case Some(err) => return StageReport("merge", ok = false, err)
-      case None => ()
+    val err = Commits(spark, snapshotDir).swap(snapshotDir, ".merge") { tmp =>
+      val snap = spark.read.parquet(snapshotDir)
+      val payloadCols = snap.columns.filter(_ != keyCol).toSeq
+      // Last change per key wins; ties on seq break on op so replayed
+      // batches with duplicated (key, seq) rows stay deterministic.
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(keyCol)).orderBy(col(seqCol).desc, col(opCol).desc)
+      val latestChg = changes
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn", seqCol)
+      val merged = snap.alias("s")
+        .join(latestChg.alias("c"),
+          col(s"s.$keyCol") === col(s"c.$keyCol"), "full")
+        .filter(col(opCol).isNull || col(opCol) =!= "D")
+        .select(
+          coalesce(col(s"s.$keyCol"), col(s"c.$keyCol")).as(keyCol) +:
+          payloadCols.map { c =>
+            val fromChange = latestChg.columns.contains(c)
+            if (fromChange)
+              when(col(opCol).isNotNull, col(s"c.$c"))
+                .otherwise(col(s"s.$c")).as(c)
+            else when(col(opCol).isNotNull, lit(null).cast(
+              snap.schema(c).dataType)).otherwise(col(s"s.$c")).as(c)
+          }: _*)
+      merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(tmp)
     }
-    val snap = spark.read.parquet(snapshotDir)
-    val payloadCols = snap.columns.filter(_ != keyCol).toSeq
-    // Last change per key wins; ties on seq break on op so replayed
-    // batches with duplicated (key, seq) rows stay deterministic.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(keyCol)).orderBy(col(seqCol).desc, col(opCol).desc)
-    val latestChg = changes
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", seqCol)
-    val merged = snap.alias("s")
-      .join(latestChg.alias("c"),
-        col(s"s.$keyCol") === col(s"c.$keyCol"), "full")
-      .filter(col(opCol).isNull || col(opCol) =!= "D")
-      .select(
-        coalesce(col(s"s.$keyCol"), col(s"c.$keyCol")).as(keyCol) +:
-        payloadCols.map { c =>
-          val fromChange = latestChg.columns.contains(c)
-          if (fromChange)
-            when(col(opCol).isNotNull, col(s"c.$c"))
-              .otherwise(col(s"s.$c")).as(c)
-          else when(col(opCol).isNotNull, lit(null).cast(
-            snap.schema(c).dataType)).otherwise(col(s"s.$c")).as(c)
-        }: _*)
-    val pLive = new Path(snapshotDir)
-    val pTmp = new Path(snapshotDir + ".merge-tmp")
-    val pOld = new Path(snapshotDir + ".merge-old")
-    merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(pTmp.toString)
-    val fs = pLive.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(pOld, true)
-    if (!fs.rename(pLive, pOld))
-      return StageReport("merge", ok = false,
-        "could not stage current snapshot aside; snapshot untouched")
-    if (!fs.rename(pTmp, pLive)) {
-      val restored = fs.rename(pOld, pLive)
-      return StageReport("merge", ok = false,
-        if (restored) "swap failed; original restored"
-        else s"swap failed AND restore failed — snapshot stranded at $pOld")
-    }
-    fs.delete(pOld, true)
-    StageReport("merge", ok = true, s"merged changes into $snapshotDir")
+    StageReport("merge", ok = err.isEmpty,
+      err.getOrElse(s"merged changes into $snapshotDir"))
   }
 
   /** Stage 3 — validate: single-pass multi-aggregate check suite over the

@@ -303,13 +303,12 @@ object Rollup {
     * forever: after compaction the report reads O(groups) rows and the
     * directory holds one file-set until batches accumulate again.
     *
-    * Swap protocol mirrors [[Pipeline.compact]]: write `<dir>.compact-tmp`,
-    * move live aside, move tmp into place, drop old — no point in the
-    * sequence has the journal been deleted before its replacement is
-    * complete. The streaming commit ledger (`_graft_commits/` markers from
-    * [[graft.streaming.Streams.startRollupJournal]]) is carried through
-    * verbatim: a replayed batchId after compaction must still be a no-op,
-    * and the markers are exactly that claim.
+    * The rewrite lands through [[Commits.swap]] (`<dir>.compact-tmp`,
+    * `<dir>.compact-old`) — no point in the sequence has the journal been
+    * deleted before its replacement is complete. The commit ledger (the
+    * markers of [[graft.streaming.Streams.startRollupJournal]]) is carried
+    * through verbatim: a replayed batchId after compaction must still be a
+    * no-op, and the markers are exactly that claim.
     *
     * Single-writer contract: a journalBatch racing the swap can land its
     * append in the about-to-be-dropped live dir and be lost — compaction
@@ -318,63 +317,34 @@ object Rollup {
     */
   def compactJournal(spark: SparkSession, journalDir: String)
       : Pipeline.StageReport = {
-    import org.apache.hadoop.fs.Path
-    val pLive = new Path(journalDir)
-    val pTmp = new Path(journalDir + ".compact-tmp")
-    val pOld = new Path(journalDir + ".compact-old")
-    val fsEntry = pLive.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Pipeline.recoverStrandedSwap(fsEntry, pLive, pOld) match {
-      case Some(err) =>
-        return Pipeline.StageReport("compact_journal", ok = false, err)
-      case None => ()
+    val commits = Commits(spark, journalDir)
+    val err = commits.swap(journalDir, ".compact") { tmp =>
+      val journal = spark.read.parquet(journalDir)
+      // Histogram journals ([[journalHistogram]]) fold by (group, bucket);
+      // algebraic journals ([[journalBatch]]) by group — detected from the
+      // journal's own schema so ONE maintenance op serves both.
+      val folded =
+        if (journal.columns.contains("h_bucket")) {
+          val groupCols = journal.columns
+            .filterNot(Set("h_bucket", "h_cnt", "batch").contains).toSeq
+          journal.dropDuplicates(groupCols ++ Seq("h_bucket", "batch"))
+            .groupBy(groupCols.map(col) :+ col("h_bucket"): _*)
+            .agg(sum(col("h_cnt")).as("h_cnt"))
+        } else {
+          val groupCols = journal.columns.filterNot(PartialCols.contains).toSeq
+          dedupReplays(journal, groupCols)
+            .groupBy(groupCols.map(col): _*)
+            .agg(sum(col("p_sum")).as("p_sum"), sum(col("p_cnt")).as("p_cnt"),
+              sum(col("p_rows")).as("p_rows"),
+              min(col("p_min")).as("p_min"), max(col("p_max")).as("p_max"))
+        }
+      folded.withColumn("batch", lit("_compacted"))
+        .coalesce(1)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(tmp)
+      commits.carryLedger(journalDir, tmp)((_, body) => body)
     }
-    val journal = spark.read.parquet(journalDir)
-    // Histogram journals ([[journalHistogram]]) fold by (group, bucket);
-    // algebraic journals ([[journalBatch]]) by group — detected from the
-    // journal's own schema so ONE maintenance op serves both.
-    val folded =
-      if (journal.columns.contains("h_bucket")) {
-        val groupCols = journal.columns
-          .filterNot(Set("h_bucket", "h_cnt", "batch").contains).toSeq
-        journal.dropDuplicates(groupCols ++ Seq("h_bucket", "batch"))
-          .groupBy(groupCols.map(col) :+ col("h_bucket"): _*)
-          .agg(sum(col("h_cnt")).as("h_cnt"))
-      } else {
-        val groupCols = journal.columns.filterNot(PartialCols.contains).toSeq
-        dedupReplays(journal, groupCols)
-          .groupBy(groupCols.map(col): _*)
-          .agg(sum(col("p_sum")).as("p_sum"), sum(col("p_cnt")).as("p_cnt"),
-            sum(col("p_rows")).as("p_rows"),
-            min(col("p_min")).as("p_min"), max(col("p_max")).as("p_max"))
-      }
-    folded.withColumn("batch", lit("_compacted"))
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(pTmp.toString)
-    val fs = pLive.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ledgerLive = new Path(pLive, "_graft_commits")
-    if (fs.exists(ledgerLive)) {
-      val ledgerTmp = new Path(pTmp, "_graft_commits")
-      fs.mkdirs(ledgerTmp)
-      fs.listStatus(ledgerLive).filter(_.isFile).foreach { st =>
-        val in = fs.open(st.getPath)
-        val body = try in.readAllBytes() finally in.close()
-        val out = fs.create(new Path(ledgerTmp, st.getPath.getName), true)
-        try out.write(body) finally out.close()
-      }
-    }
-    fs.delete(pOld, true)
-    if (!fs.rename(pLive, pOld))
-      return Pipeline.StageReport("compact_journal", ok = false,
-        "could not stage current journal aside; journal untouched")
-    if (!fs.rename(pTmp, pLive)) {
-      val restored = fs.rename(pOld, pLive)
-      return Pipeline.StageReport("compact_journal", ok = false,
-        if (restored) "swap failed; original restored"
-        else s"swap failed AND restore failed — journal stranded at $pOld")
-    }
-    fs.delete(pOld, true)
-    Pipeline.StageReport("compact_journal", ok = true,
-      s"compacted $journalDir")
+    Pipeline.StageReport("compact_journal", ok = err.isEmpty,
+      err.getOrElse(s"compacted $journalDir"))
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.engine.Commits
+
 /** Structured Streaming surface (SURVEY §2.9 stretch goal): the streaming
   * restatement of the batch event-time queries in graft.queries.Events.
   * Verified by ScalaTest with MemoryStream (graft.streaming.StreamsSpec) —
@@ -124,6 +126,18 @@ object Streams {
         col("left_ts"), col("right_ts"))
   }
 
+  /** The wiring every `start*` below shares: an append-mode query whose
+    * micro-batches run `step`, checkpointed at `checkpointDir`.
+    */
+  private def startBatches(stream: DataFrame, checkpointDir: String)(
+      step: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(step)
+      .start()
+
   /** Streaming ingestion into the incremental analytics table: each
     * micro-batch runs the SAME cleaning+append+sidecar step as the batch
     * [[graft.engine.Pipeline.loadIncremental]] (via foreachBatch), so a
@@ -141,13 +155,9 @@ object Streams {
       checkpointDir: String,
       at: Long => Option[Timestamp] = _ => None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatchIdempotent(batch, analyticsDir, batchId, at(batchId))
-      }
-      .start()
+    startBatches(stream, checkpointDir) { (batch, batchId) =>
+      appendBatchIdempotent(batch, analyticsDir, batchId, at(batchId))
+    }
 
   /** Streaming incremental-aggregate materialization: each micro-batch is
     * reduced to its per-group algebraic partials and appended to a
@@ -162,20 +172,16 @@ object Streams {
   def startRollupJournal(stream: DataFrame, journalDir: String,
       checkpointDir: String, groupCols: Seq[String], valueCol: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        journalBatchIdempotent(batch, journalDir, batchId, groupCols,
-          valueCol)
-      }
-      .start()
+    startBatches(stream, checkpointDir) { (batch, batchId) =>
+      journalBatchIdempotent(batch, journalDir, batchId, groupCols,
+        valueCol)
+    }
 
-  /** The ledger-guarded journal step of [[startRollupJournal]]. Marker
-    * placement mirrors [[appendBatchIdempotent]] (`_graft_commits/` beside
-    * the data — underscore-prefixed, so parquet readers of the journal
-    * never see it); the residual crash-between-journal-and-marker seam
-    * duplicates ONE batch's partials on replay, and
+  /** The ledger-guarded journal step of [[startRollupJournal]]. The
+    * marker is [[graft.engine.Commits.once]]'s, beside the journal and
+    * invisible to its parquet readers; the residual
+    * crash-between-journal-and-marker seam duplicates ONE batch's
+    * partials on replay, and
     * [[graft.engine.Rollup.report]] SELF-HEALS it: the replayed partials
     * are byte-identical (same tag, same deterministic agg of the same
     * input), and the report collapses duplicates by (group, batch tag)
@@ -184,21 +190,12 @@ object Streams {
     */
   private[graft] def journalBatchIdempotent(batch: DataFrame,
       journalDir: String, batchId: Long, groupCols: Seq[String],
-      valueCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(journalDir, s"_graft_commits/$batchId")
-    val fs = marker.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+      valueCol: String): Unit =
+    Commits(batch.sparkSession, journalDir).once(journalDir, batchId) {
       graft.engine.Rollup.journalBatch(batch, journalDir, groupCols,
         valueCol, s"b$batchId")
-      try fs.create(marker, false).close() // exclusive: lost race = no-op
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-        case _: java.nio.file.FileAlreadyExistsException => ()
-      }
+      None
     }
-  }
 
   /** Standing EWMA spike monitor — the streaming twin of the batch
     * q_ewma_control: each micro-batch (1) appends its per-(type, hour)
@@ -220,34 +217,23 @@ object Streams {
       verdictDir: String, checkpointDir: String, typeCol: String,
       tsCol: String, valueCol: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ewmaBatchIdempotent(batch, journalDir, verdictDir, batchId,
-          typeCol, tsCol, valueCol)
-      }
-      .start()
+    startBatches(stream, checkpointDir) { (batch, batchId) =>
+      ewmaBatchIdempotent(batch, journalDir, verdictDir, batchId,
+        typeCol, tsCol, valueCol)
+    }
 
   private[graft] def ewmaBatchIdempotent(batch: DataFrame,
       journalDir: String, verdictDir: String, batchId: Long,
       typeCol: String, tsCol: String, valueCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val marker = new Path(journalDir, s"_graft_commits/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    Commits(spark, journalDir).once(journalDir, batchId) {
       batch
         .groupBy(col(typeCol).as("event_type"),
           date_trunc("hour", col(tsCol)).as("h"))
         .agg(sum(col(valueCol)).as("vsum"))
         .withColumn("_tag", lit(s"b$batchId"))
         .write.mode("append").parquet(journalDir)
-      try fs.create(marker, false).close() // exclusive: lost race = no-op
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-        case _: java.nio.file.FileAlreadyExistsException => ()
-      }
+      None
     }
     ewmaFromJournal(spark, journalDir)
       .write.mode("overwrite").parquet(s"$verdictDir/b$batchId")
@@ -326,24 +312,17 @@ object Streams {
       verdictDir: String, checkpointDir: String, typeCol: String,
       tsCol: String, valueCol: String, cut: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ksW1BatchIdempotent(batch, journalDir, verdictDir, batchId,
-          typeCol, tsCol, valueCol, cut)
-      }
-      .start()
+    startBatches(stream, checkpointDir) { (batch, batchId) =>
+      ksW1BatchIdempotent(batch, journalDir, verdictDir, batchId,
+        typeCol, tsCol, valueCol, cut)
+    }
 
   private[graft] def ksW1BatchIdempotent(batch: DataFrame,
       journalDir: String, verdictDir: String, batchId: Long,
       typeCol: String, tsCol: String, valueCol: String, cut: String)
       : Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val marker = new Path(journalDir, s"_graft_commits/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    Commits(spark, journalDir).once(journalDir, batchId) {
       batch
         .groupBy(col(typeCol).as("event_type"),
           col(valueCol).as("value"),
@@ -352,11 +331,7 @@ object Streams {
         .filter(col("is_ref").isNotNull) // NULL ts: neither period
         .withColumn("_tag", lit(s"b$batchId"))
         .write.mode("append").parquet(journalDir)
-      try fs.create(marker, false).close() // exclusive: lost race = no-op
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-        case _: java.nio.file.FileAlreadyExistsException => ()
-      }
+      None
     }
     val (ks, w1) = ksW1FromJournal(spark, journalDir)
     ks.write.mode("overwrite").parquet(s"$verdictDir/ks/b$batchId")
@@ -402,14 +377,10 @@ object Streams {
       checkpointDir: String, groupCols: Seq[String], valueCol: String,
       boundaries: Array[Double])
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        histogramBatchIdempotent(batch, journalDir, batchId, groupCols,
-          valueCol, boundaries)
-      }
-      .start()
+    startBatches(stream, checkpointDir) { (batch, batchId) =>
+      histogramBatchIdempotent(batch, journalDir, batchId, groupCols,
+        valueCol, boundaries)
+    }
 
   /** Ledger-guarded step of [[startHistogramJournal]] — marker contract
     * identical to [[journalBatchIdempotent]], and the residual
@@ -419,21 +390,12 @@ object Streams {
     */
   private[graft] def histogramBatchIdempotent(batch: DataFrame,
       journalDir: String, batchId: Long, groupCols: Seq[String],
-      valueCol: String, boundaries: Array[Double]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(journalDir, s"_graft_commits/$batchId")
-    val fs = marker.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+      valueCol: String, boundaries: Array[Double]): Unit =
+    Commits(batch.sparkSession, journalDir).once(journalDir, batchId) {
       graft.engine.Rollup.journalHistogram(batch, journalDir, groupCols,
         valueCol, boundaries, s"b$batchId")
-      try fs.create(marker, false).close() // exclusive: lost race = no-op
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-        case _: java.nio.file.FileAlreadyExistsException => ()
-      }
+      None
     }
-  }
 
   /** Standing drift monitor — the composition `q_psi_journal` proves
     * lossless, wired end-to-end: each micro-batch (1) appends its
@@ -462,14 +424,10 @@ object Streams {
       valueCol: String, boundaries: Array[Double], refBatchId: Long = 0L,
       threshold: Double = 0.2)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        driftBatchIdempotent(batch, journalDir, verdictDir, batchId,
-          groupCol, valueCol, boundaries, refBatchId, threshold)
-      }
-      .start()
+    startBatches(stream, checkpointDir) { (batch, batchId) =>
+      driftBatchIdempotent(batch, journalDir, verdictDir, batchId,
+        groupCol, valueCol, boundaries, refBatchId, threshold)
+    }
 
   /** The per-batch step of [[startDriftMonitor]]. The reference batch only
     * journals (a distribution is not drift against itself).
@@ -511,69 +469,52 @@ object Streams {
     * (the decomposition the batch oracle pins), so downstream
     * verify/cluster stages read one directory and never rescan history.
     */
-  /** Numeric id of a journal batch-dir name `b<id>`, None for any
-    * non-tag directory (a stray file must be ignored, never crash a
-    * micro-batch or a fold). Try-parse instead of a digit-count bound:
-    * the previous `length <= 19` guard allowed at most 18 digits after
-    * the 'b', silently excluding lawful ids >= 10^18 (Long.MaxValue is
-    * 19 digits, dir-name length 20); an id past Long.MaxValue now
-    * rejects by failing the parse rather than by an off-by-one.
-    */
-  private[graft] def batchTag(t: String): Option[Long] =
-    if (t.length > 1 && t.startsWith("b") && t.drop(1).forall(_.isDigit))
-      scala.util.Try(t.drop(1).toLong).toOption
-    else None
-
   def startDedupJournal(docs: DataFrame, stateDir: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatchIdempotent(batch, stateDir, batchId, idCol, textCol)
-      }
-      .start()
+    startBatches(docs, checkpointDir) { (batch, batchId) =>
+      dedupBatchIdempotent(batch, stateDir, batchId, idCol, textCol)
+    }
 
   /** The per-batch step of [[startDedupJournal]]. */
   private[graft] def dedupBatchIdempotent(batch: DataFrame, stateDir: String,
       batchId: Long, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
-    import org.apache.hadoop.fs.Path
     import graft.ext.Dedup
     val spark = batch.sparkSession
     val tag = s"b$batchId"
-    val marker = new Path(stateDir, s"_graft_commits/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return
-    val newBands = Dedup.lshBands(
-      Dedup.minhashSignatures(batch, idCol, textCol), idCol)
-      .localCheckpoint() // feeds the pair join AND the journal write
-    val bandsRoot = new Path(stateDir, "bands")
-    // Strictly-earlier batches only: a replay of batch N after N+1 has
-    // landed (manual backfill, marker deleted out of band) must not pair
-    // against FUTURE bands — that would write extra pairs under pairs/bN
-    // and duplicate them across journal subdirs. Filtering to numeric ids
-    // < batchId also self-excludes the current tag.
-    val priorTags =
-      if (fs.exists(bandsRoot))
-        fs.listStatus(bandsRoot).toSeq.map(_.getPath.getName)
-          .filter(t => batchTag(t).exists(_ < batchId))
-      else Seq.empty
-    val oldBands =
-      if (priorTags.isEmpty) newBands.filter(lit(false))
-      else spark.read.parquet(
-        priorTags.map(t => s"$stateDir/bands/$t"): _*)
-    val pairs = Dedup.incrementalCandidatePairs(oldBands, newBands, idCol)
-    pairs.write.mode("overwrite").parquet(s"$stateDir/pairs/$tag")
-    newBands.write.mode("overwrite").parquet(s"$stateDir/bands/$tag")
-    try fs.create(marker, false).close() // exclusive: lost race = no-op
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-      case _: java.nio.file.FileAlreadyExistsException => ()
+    val commits = Commits(spark, stateDir)
+    commits.once(stateDir, batchId) {
+      val newBands = Dedup.lshBands(
+        Dedup.minhashSignatures(batch, idCol, textCol), idCol)
+        .localCheckpoint() // feeds the pair join AND the journal write
+      val bandsRoot = new org.apache.hadoop.fs.Path(stateDir, "bands")
+      // Strictly-earlier batches only: a replay of batch N after N+1 has
+      // landed (manual backfill, marker deleted out of band) must not pair
+      // against FUTURE bands — that would write extra pairs under pairs/bN
+      // and duplicate them across journal subdirs. Filtering to numeric
+      // ids < batchId also self-excludes the current tag.
+      val priorTags =
+        if (commits.fs.exists(bandsRoot))
+          commits.fs.listStatus(bandsRoot).toSeq.map(_.getPath.getName)
+            .filter(t => batchTag(t).exists(_ < batchId))
+        else Seq.empty
+      val oldBands =
+        if (priorTags.isEmpty) newBands.filter(lit(false))
+        else spark.read.parquet(
+          priorTags.map(t => s"$stateDir/bands/$t"): _*)
+      val pairs = Dedup.incrementalCandidatePairs(oldBands, newBands, idCol)
+      pairs.write.mode("overwrite").parquet(s"$stateDir/pairs/$tag")
+      newBands.write.mode("overwrite").parquet(s"$stateDir/bands/$tag")
+      None
     }
   }
+
+  /** [[graft.engine.Commits.batchTag]]: the numeric id of a journal
+    * batch-dir name `b<id>`.
+    */
+  private[graft] def batchTag(t: String): Option[Long] = Commits.batchTag(t)
 
   /** Canonical-URL keep-first dedup state, maintained incrementally over
     * arriving crawl batches — the streaming twin of `q_dedup_url` (the
@@ -594,35 +535,24 @@ object Streams {
       checkpointDir: String, idCol: String = "doc_id",
       urlCol: String = "url")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        urlDedupBatchIdempotent(batch, stateDir, batchId, idCol, urlCol)
-      }
-      .start()
+    startBatches(docs, checkpointDir) { (batch, batchId) =>
+      urlDedupBatchIdempotent(batch, stateDir, batchId, idCol, urlCol)
+    }
 
   /** The per-batch step of [[startUrlDedupJournal]]. */
   private[graft] def urlDedupBatchIdempotent(batch: DataFrame,
       stateDir: String, batchId: Long, idCol: String = "doc_id",
-      urlCol: String = "url"): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val marker = new Path(stateDir, s"_graft_commits/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return
-    batch
-      .select(col(idCol).as("first_doc"),
-        graft.queries.Docs.urlCanon(col(urlCol)).as("canon_url"))
-      .groupBy(col("canon_url"))
-      .agg(count(lit(1)).as("n_docs"), min(col("first_doc")).as("first_doc"))
-      .write.mode("overwrite").parquet(s"$stateDir/urls/b$batchId")
-    try fs.create(marker, false).close() // exclusive: lost race = no-op
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-      case _: java.nio.file.FileAlreadyExistsException => ()
+      urlCol: String = "url"): Unit =
+    Commits(batch.sparkSession, stateDir).once(stateDir, batchId) {
+      batch
+        .select(col(idCol).as("first_doc"),
+          graft.queries.Docs.urlCanon(col(urlCol)).as("canon_url"))
+        .groupBy(col("canon_url"))
+        .agg(count(lit(1)).as("n_docs"),
+          min(col("first_doc")).as("first_doc"))
+        .write.mode("overwrite").parquet(s"$stateDir/urls/b$batchId")
+      None
     }
-  }
 
   /** Fold the committed journal into the keep-first answer: reads the
     * `_compacted` snapshot (when one exists) plus every batch dir whose
@@ -635,19 +565,12 @@ object Streams {
     */
   def urlDedupFromJournal(spark: SparkSession, stateDir: String)
       : DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(stateDir, "urls")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.map(_.getPath.getName)
-        .filter { t =>
-          // the snapshot folds only already-committed batches, so it
-          // carries no marker of its own; batch dirs still require one
-          t == "_compacted" || batchTag(t).exists(id =>
-            fs.exists(new Path(stateDir, s"_graft_commits/$id")))
-        }
-    require(dirs.nonEmpty, s"no committed url-dedup batches under $root")
+    // the snapshot folds only already-committed batches, so it carries no
+    // marker of its own; batch dirs still require one
+    val dirs = Commits(spark, stateDir)
+      .committedTags(stateDir, "urls", Set("_compacted"))
+    require(dirs.nonEmpty,
+      s"no committed url-dedup batches under $stateDir/urls")
     spark.read.parquet(dirs.map(t => s"$stateDir/urls/$t"): _*)
       .groupBy(col("canon_url"))
       .agg(sum(col("n_docs")).as("n_docs"),
@@ -661,8 +584,8 @@ object Streams {
     * per-batch-dir layout): after the swap, [[urlDedupFromJournal]]
     * reads one snapshot dir plus whatever batches land later, and the
     * fold is unchanged because the partials are mergeable by
-    * construction. The commit markers live OUTSIDE the swapped dir
-    * (`stateDir/_graft_commits/`) and are untouched, so an
+    * construction. The commit markers live OUTSIDE the swapped dir (in
+    * `stateDir`'s ledger) and are untouched, so an
     * at-least-once replay of a compacted batchId remains a no-op — the
     * marker is exactly that claim. An UNcommitted half-batch present at
     * compaction time is dropped with the old dir; its replay recomputes
@@ -672,35 +595,16 @@ object Streams {
     */
   def compactUrlDedupJournal(spark: SparkSession, stateDir: String)
       : graft.engine.Pipeline.StageReport = {
-    import org.apache.hadoop.fs.Path
-    val stage = "compact_url_journal"
-    val pLive = new Path(stateDir, "urls")
-    val pTmp = new Path(stateDir, "urls.compact-tmp")
-    val pOld = new Path(stateDir, "urls.compact-old")
-    val fs = pLive.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.engine.Pipeline.recoverStrandedSwap(fs, pLive, pOld) match {
-      case Some(err) =>
-        return graft.engine.Pipeline.StageReport(stage, ok = false, err)
-      case None => ()
+    val live = s"$stateDir/urls"
+    val err = Commits(spark, stateDir).swap(live, ".compact") { tmp =>
+      // Materializes the fold BEFORE any rename: the write below executes
+      // the read of the live dir into the tmp snapshot.
+      urlDedupFromJournal(spark, stateDir).coalesce(1).write
+        .mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$tmp/_compacted")
     }
-    // Materializes the fold BEFORE any rename: the write below executes
-    // the read of the live dir into the tmp snapshot.
-    urlDedupFromJournal(spark, stateDir).coalesce(1).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new Path(pTmp, "_compacted").toString)
-    fs.delete(pOld, true)
-    if (!fs.rename(pLive, pOld))
-      return graft.engine.Pipeline.StageReport(stage, ok = false,
-        "could not stage current journal aside; journal untouched")
-    if (!fs.rename(pTmp, pLive)) {
-      val restored = fs.rename(pOld, pLive)
-      return graft.engine.Pipeline.StageReport(stage, ok = false,
-        if (restored) "swap failed; original restored"
-        else s"swap failed AND restore failed — journal stranded at $pOld")
-    }
-    fs.delete(pOld, true)
-    graft.engine.Pipeline.StageReport(stage, ok = true,
-      s"compacted $pLive")
+    graft.engine.Pipeline.StageReport("compact_url_journal",
+      ok = err.isEmpty, err.getOrElse(s"compacted $live"))
   }
 
   /** Persist the static language-ID model — the broadcast side of
@@ -738,34 +642,24 @@ object Streams {
   def startLangidMonitor(docs: DataFrame, modelDir: String,
       stateDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        langidBatchIdempotent(batch, modelDir, stateDir, batchId)
-      }
-      .start()
+    startBatches(docs, checkpointDir) { (batch, batchId) =>
+      langidBatchIdempotent(batch, modelDir, stateDir, batchId)
+    }
 
   /** The per-batch step of [[startLangidMonitor]]. */
   private[graft] def langidBatchIdempotent(batch: DataFrame,
       modelDir: String, stateDir: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val marker = new Path(stateDir, s"_graft_commits/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return
-    val w = spark.read.parquet(s"$modelDir/weights")
-    val lc = spark.read.parquet(s"$modelDir/consts")
-    graft.queries.Docs.langidScore(batch, w, lc,
-        graft.queries.Docs.langidUnigramFeats,
-        graft.queries.Docs.langidUnigramNFeats)
-      .groupBy(col("lang"), col("pred_lang"))
-      .agg(count(lit(1)).as("n_docs"))
-      .write.mode("overwrite").parquet(s"$stateDir/confusion/b$batchId")
-    try fs.create(marker, false).close() // exclusive: lost race = no-op
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-      case _: java.nio.file.FileAlreadyExistsException => ()
+    Commits(spark, stateDir).once(stateDir, batchId) {
+      val w = spark.read.parquet(s"$modelDir/weights")
+      val lc = spark.read.parquet(s"$modelDir/consts")
+      graft.queries.Docs.langidScore(batch, w, lc,
+          graft.queries.Docs.langidUnigramFeats,
+          graft.queries.Docs.langidUnigramNFeats)
+        .groupBy(col("lang"), col("pred_lang"))
+        .agg(count(lit(1)).as("n_docs"))
+        .write.mode("overwrite").parquet(s"$stateDir/confusion/b$batchId")
+      None
     }
   }
 
@@ -777,16 +671,10 @@ object Streams {
     */
   def langidConfusionFromJournal(spark: SparkSession, stateDir: String)
       : DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(stateDir, "confusion")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.map(_.getPath.getName)
-        .filter(t => batchTag(t).exists(id =>
-          fs.exists(new Path(stateDir, s"_graft_commits/$id"))))
+    val committed = Commits(spark, stateDir)
+      .committedTags(stateDir, "confusion", Set.empty)
     require(committed.nonEmpty,
-      s"no committed langid confusion batches under $root")
+      s"no committed langid confusion batches under $stateDir/confusion")
     spark.read.parquet(committed.map(t => s"$stateDir/confusion/$t"): _*)
       .groupBy(col("lang"), col("pred_lang"))
       .agg(sum(col("n_docs")).as("n_docs"))
@@ -829,14 +717,10 @@ object Streams {
       flagDir: String, checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        decontamBatchIdempotent(batch, evalGramsDir, flagDir, batchId,
-          idCol, textCol)
-      }
-      .start()
+    startBatches(docs, checkpointDir) { (batch, batchId) =>
+      decontamBatchIdempotent(batch, evalGramsDir, flagDir, batchId,
+        idCol, textCol)
+    }
 
   /** The per-batch step of [[startDecontamMonitor]]. Hit counts are per
     * distinct gram (the batch sweep's countDistinct semantics): the
@@ -874,63 +758,39 @@ object Streams {
       checkpointDir: String, keyCol: String, opCol: String = "op",
       seqCol: String = "seq")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val r = graft.engine.Pipeline.applyChanges(batch.sparkSession,
-          snapshotDir, batch, keyCol, opCol, seqCol)
-        // Surface a failed swap as a stream failure, not a silent skip.
-        require(r.ok, s"cdc merge failed: ${r.detail}")
-      }
-      .start()
+    startBatches(changes, checkpointDir) { (batch, _) =>
+      val r = graft.engine.Pipeline.applyChanges(batch.sparkSession,
+        snapshotDir, batch, keyCol, opCol, seqCol)
+      // Surface a failed swap as a stream failure, not a silent skip.
+      require(r.ok, s"cdc merge failed: ${r.detail}")
+    }
 
-  /** [[graft.engine.Pipeline.appendCleaned]] guarded by a commit ledger
-    * (`_graft_commits/<batchId>` markers beside the data): replaying an
-    * already-committed micro-batch is a no-op, which is what makes the
-    * at-least-once foreachBatch contract safe to append under. The marker
-    * lands AFTER the data commit, so the residual window is a crash
-    * between the two — one batch can then duplicate on replay; that seam
-    * is the plain-parquet limit (a table format's transactional commit
-    * retires it), and [[graft.engine.Pipeline.readLatest]] still dedups
-    * such rows by key.
+  /** [[graft.engine.Pipeline.appendCleaned]] guarded by the commit ledger
+    * ([[graft.engine.Commits.once]]): replaying an already-committed
+    * micro-batch is a no-op, which is what makes the at-least-once
+    * foreachBatch contract safe to append under. The marker lands AFTER
+    * the data commit, so the residual window is a crash between the two —
+    * one batch can then duplicate on replay; that seam is the
+    * plain-parquet limit (a table format's transactional commit retires
+    * it), and [[graft.engine.Pipeline.readLatest]] still dedups such rows
+    * by key.
+    *
+    * The marker records the rows actually WRITTEN (appendCleaned's
+    * observed post-cleaning count — cleaning dedups exact duplicates, so
+    * the raw batch count would overstate it), so the residual duplicate
+    * seams — a crash between append and marker, or two misconfigured
+    * writers racing the exists check — are not silent: [[ledgerConsistent]]
+    * compares sum-of-marker rows against the table and flags the drift.
+    * (Skipping on a pre-claimed batch would turn the crash seam into data
+    * LOSS, which is strictly worse than an auditable duplicate that
+    * readLatest dedups by key anyway.)
     */
   private[graft] def appendBatchIdempotent(batch: DataFrame,
       analyticsDir: String, batchId: Long,
-      at: Option[Timestamp]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(analyticsDir, s"_graft_commits/$batchId")
-    val fs = marker.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      // The marker records the rows actually WRITTEN (appendCleaned's
-      // observed post-cleaning count — cleaning dedups exact duplicates,
-      // so the raw batch count would overstate it) and is created
-      // EXCLUSIVELY: replaying an already-marked batch is a no-op above,
-      // and the residual duplicate seams — a crash between append and
-      // marker, or two misconfigured writers racing the exists check —
-      // are no longer silent: [[ledgerConsistent]] compares sum-of-marker
-      // rows against the table and flags the drift. (Skipping on a
-      // pre-claimed batch would turn the crash seam into data LOSS, which
-      // is strictly worse than an auditable duplicate that
-      // [[graft.engine.Pipeline.readLatest]] dedups by key anyway.)
-      val rows = graft.engine.Pipeline.appendCleaned(batch, analyticsDir, at)
-      try {
-        val out = fs.create(marker, false) // exclusive: lost race = no-op
-        out.write(s"""{"batchId":$batchId,"rows":$rows}"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        out.close()
-      } catch {
-        // ONLY the benign lost race is swallowed: another writer marked
-        // the same batch first, and its marker carries the same claim.
-        // Any other IO failure must propagate — a committed-but-unmarked
-        // batch silently re-opens the replay-duplicate seam, which is
-        // exactly what the ledger exists to close.
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-        case _: java.nio.file.FileAlreadyExistsException => ()
-      }
+      at: Option[Timestamp]): Unit =
+    Commits(batch.sparkSession, analyticsDir).once(analyticsDir, batchId) {
+      Some(graft.engine.Pipeline.appendCleaned(batch, analyticsDir, at))
     }
-  }
 
   /** Audit for the commit-ledger seams [[appendBatchIdempotent]] documents:
     * true iff the analytics table's row count equals the sum of per-batch
@@ -945,24 +805,18 @@ object Streams {
     * legitimately-zero-row batch.
     */
   def ledgerConsistent(spark: SparkSession, analyticsDir: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(analyticsDir, "_graft_commits")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return true
-    val expected = fs.listStatus(dir).filter(_.isFile).flatMap { st =>
-      val in = fs.open(st.getPath)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      // -? : backfill delta markers (Pipeline.backfillDay) are negative
-      // when the repair shrank the day
-      val rows = """"rows":(-?\d+)""".r.findFirstMatchIn(body)
-        .map(_.group(1).toLong)
-      if (rows.isEmpty)
-        Console.err.println(s"graft: skipping unparsable ledger marker " +
-          s"${st.getPath} (pre-format or corrupt) in consistency audit")
-      rows
-    }.sum
-    graft.engine.Pipeline.readTable(spark, analyticsDir).count() == expected
+    val commits = Commits(spark, analyticsDir)
+    commits.markerNames(analyticsDir).forall { names =>
+      val expected = names.flatMap { name =>
+        val marker = commits.marker(analyticsDir, name)
+        val rows = commits.readUtf8(marker).flatMap(Commits.rows)
+        if (rows.isEmpty)
+          Console.err.println(s"graft: skipping unparsable ledger marker " +
+            s"$marker (pre-format or corrupt) in consistency audit")
+        rows
+      }.sum
+      graft.engine.Pipeline.readTable(spark, analyticsDir).count() == expected
+    }
   }
 
   /** Audit for the rollup journal's commit ledger — the journal twin of
@@ -978,24 +832,20 @@ object Streams {
     * partial rows) — the journal is tiny by design.
     */
   def rollupLedgerConsistent(spark: SparkSession, journalDir: String)
-      : Boolean = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(journalDir, "_graft_commits")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return true
-    val markers = fs.listStatus(dir).filter(_.isFile)
-      .map(_.getPath.getName).toSet
-    val tags = spark.read.parquet(journalDir)
-      .select(col("batch")).distinct().collect()
-      .map(_.getString(0)).toSet
-    val compacted = tags.contains("_compacted")
-    val batchTags = tags.filter(_.startsWith("b"))
-    val unledgered = batchTags.filterNot(t => markers.contains(t.drop(1)))
-    val orphanMarkers =
-      if (compacted) Set.empty[String]
-      else markers.filterNot(m => batchTags.contains(s"b$m"))
-    unledgered.isEmpty && orphanMarkers.isEmpty
-  }
+      : Boolean =
+    Commits(spark, journalDir).markerNames(journalDir).forall { names =>
+      val markers = names.toSet
+      val tags = spark.read.parquet(journalDir)
+        .select(col("batch")).distinct().collect()
+        .map(_.getString(0)).toSet
+      val compacted = tags.contains("_compacted")
+      val batchTags = tags.filter(_.startsWith("b"))
+      val unledgered = batchTags.filterNot(t => markers.contains(t.drop(1)))
+      val orphanMarkers =
+        if (compacted) Set.empty[String]
+        else markers.filterNot(m => batchTags.contains(s"b$m"))
+      unledgered.isEmpty && orphanMarkers.isEmpty
+    }
 
   /** Stateful sessionization: 30-minute-gap sessions per user via
     * flatMapGroupsWithState with event-time timeouts — the streaming twin
@@ -1072,35 +922,25 @@ object Streams {
       stateDir: String, checkpointDir: String, idCol: String = "vec_id",
       vecCol: String = "embedding")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ivfBatchIdempotent(batch, centroidsDir, stateDir, batchId, idCol,
-          vecCol)
-      }
-      .start()
+    startBatches(vectors, checkpointDir) { (batch, batchId) =>
+      ivfBatchIdempotent(batch, centroidsDir, stateDir, batchId, idCol,
+        vecCol)
+    }
 
   /** The per-batch step of [[startIvfJournal]]. */
   private[graft] def ivfBatchIdempotent(batch: DataFrame,
       centroidsDir: String, stateDir: String, batchId: Long,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    import org.apache.hadoop.fs.Path
     import graft.ext.Similarity
     val spark = batch.sparkSession
-    val marker = new Path(stateDir, s"_graft_commits/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return
-    val cents = Similarity.withNorm(
-      spark.read.parquet(centroidsDir), idCol, vecCol)
-    Similarity.assignClustersAgainst(
-        Similarity.withNorm(batch, idCol, vecCol), idCol, cents)
-      .select(col(idCol), col("cluster_id"))
-      .write.mode("overwrite").parquet(s"$stateDir/asgn/b$batchId")
-    try fs.create(marker, false).close() // exclusive: lost race = no-op
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-      case _: java.nio.file.FileAlreadyExistsException => ()
+    Commits(spark, stateDir).once(stateDir, batchId) {
+      val cents = Similarity.withNorm(
+        spark.read.parquet(centroidsDir), idCol, vecCol)
+      Similarity.assignClustersAgainst(
+          Similarity.withNorm(batch, idCol, vecCol), idCol, cents)
+        .select(col(idCol), col("cluster_id"))
+        .write.mode("overwrite").parquet(s"$stateDir/asgn/b$batchId")
+      None
     }
   }
 }

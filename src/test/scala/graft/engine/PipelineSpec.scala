@@ -277,9 +277,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val analytics = root.resolve("inc-empty-analytics").toString
     val batch = Seq((1L, "v1")).toDF("id", "payload").limit(0)
     batch.write.mode("overwrite").parquet(staging)
-    // zero-row append leaves a parquet dir with no data files — but the
-    // sidecar journals the schema, so readLatest succeeds empty (the seam
-    // a table format's schema journal exists to close)
+    // zero-row append leaves its day dir holding one empty parquet file
+    // that carries the schema, and the sidecar journals the schema, so
+    // readLatest succeeds empty (the seam a table format's schema journal
+    // exists to close)
     Pipeline.loadIncremental(spark, staging, analytics,
       Some(Timestamp.valueOf("2024-01-01 00:00:00")))
     val viaSidecar = Pipeline.readLatest(spark, analytics, Seq("id"))
